@@ -75,7 +75,7 @@ def kmeans_fit(
     dim = len(seeds[0]["embedding"])
     cents = [[float(x) for x in r["embedding"]] for r in seeds]
 
-    from decimal import Decimal
+    from decimal import Decimal, localcontext
 
     history: list[float] = []
     for _ in range(n_iters):
@@ -84,15 +84,16 @@ def kmeans_fit(
         # round-trips): the centroid update and the inertia ride the
         # SAME (cell, dim)-keyed aggregate — dim 0 enumerates every
         # assigned vector exactly once, so the per-(cell, dim=0) decimal
-        # dist2 partials sum (exactly, in Python Decimal — decimal
-        # addition is associative) to the same total the separate
-        # whole-corpus decimal aggregate produced. The fold now feeds a
-        # single consumer, so the per-iteration persist/unpersist (and
-        # its second corpus pass) is gone: the fit was measured
-        # job-dispatch-bound, not fold-bound (OPTIMIZATION_r13.md
-        # "kmeans fit": the k-distance map is 0.19 s of a 4.4 s cold
-        # fit at sf0.1), so the distance step deliberately stays on the
-        # JVM fold.
+        # dist2 partials sum in Python Decimal to the total the separate
+        # whole-corpus decimal aggregate produced. Decimal addition is
+        # associative only while no sum rounds, so the sum runs at 50
+        # significant digits: 12 digits of headroom over the 38-digit
+        # partials. The fold now feeds a single consumer, so the
+        # per-iteration persist/unpersist (and its second corpus pass)
+        # is gone: the fit was measured job-dispatch-bound, not
+        # fold-bound (commit 6091888: the k-distance map is 0.19 s of a
+        # 4.4 s cold fit at sf0.1), so the distance step deliberately
+        # stays on the JVM fold.
         upd = (
             assigned.select(
                 "cell", F.posexplode("embedding").alias("dim", "x"), "dist2"
@@ -120,9 +121,11 @@ def kmeans_fit(
         for cell, vec in by_cell.items():
             new_cents[cell] = vec
         cents = new_cents
-        inertia = sum(
-            (r["ip"] for r in rows if r["ip"] is not None), Decimal(0)
-        )
+        with localcontext() as ctx:
+            ctx.prec = 50
+            inertia = sum(
+                (r["ip"] for r in rows if r["ip"] is not None), Decimal(0)
+            )
         history.append(float(inertia))
     return cents, history
 

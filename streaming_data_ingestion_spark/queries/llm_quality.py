@@ -247,19 +247,13 @@ def q_dup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-aggregate-then-join-back, which would recompute the whole
     shingle pass for the second consumer of the gram stream (measured
     2×: 8.3s → ~4s at sf0.1) — the gram stream shuffles once either
-    way, so the window form is strictly cheaper. (Hot-gram caveat,
-    MEASURED at sf1-skew in r13, docs/BENCH_NOTES.md: with a boilerplate
-    gram injected into 30% and then 100% of a 200k-doc corpus, the
-    window form still wins at every share — 1.57/1.70 s vs the
-    agg+join's 2.58/2.70 s — because the hot window partition is a
-    linear count over ~0.2M rows (~0.75 µs/row) while agg+join pays a
-    second gram exchange + join (~0.9 s here) REGARDLESS of skew; the
-    naive agg+join also mis-broadcast the 39M-row gram-count table and
-    OOM'd until hinted to SMJ. Extrapolating the measured per-row cost,
-    the single-task window partition overtakes that fixed overhead only
-    past ~10⁶ docs sharing ONE gram; a corpus curated that badly should
-    flip to agg+join with a salted count, and AQE skew-join on the
-    probe side then bounds the hot task.)
+    way, so the window form is strictly cheaper. (Hot-gram caveat, not
+    measured: a gram shared by a large share of documents puts its whole
+    window partition in one task. That task is a linear count, while
+    agg+join pays a second gram exchange and join whatever the skew; a
+    corpus where one gram dominates could still make agg+join with a
+    salted count the cheaper form, with AQE skew-join bounding the hot
+    task.)
     """
     d = spread_for_cpu(load(spark, sf_dir, "documents").select("doc_id", "text"))
     # project the token array ONCE (JVM split), then shingle in Arrow

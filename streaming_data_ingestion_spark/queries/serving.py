@@ -28,6 +28,7 @@ at all; this is §2B/north-star analytical surface.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -253,8 +254,11 @@ def stored_cms_path(spark: SparkSession, sf_dir: str) -> str:
         )
 
         tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        path = artifact_path(f"documents_cms_{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        # the grid's shape sidecar is a sibling of the grid, so both
+        # live under the one artifact directory that atexit removes
+        root = artifact_path(f"documents_cms_{tag}")
+        shutil.rmtree(root, ignore_errors=True)
+        path = os.path.join(root, "grid")
         docs = load(spark, sf_dir, "documents")
         wb = merge_cms_grid(path, run_ns="cms-serve")
         for e in range(4):

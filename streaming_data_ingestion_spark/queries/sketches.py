@@ -197,8 +197,8 @@ def heavy_hitters_cms(
         # per-task distinct-token memo against this JVM form and the
         # JVM form WON — F.md5 is whole-stage-codegen, and the Python
         # boundary transfer cost exceeded the memo's saving: warm build
-        # medians 0.29 s JVM vs 0.44 s Arrow at sf0.1 for both grids —
-        # so the hashing stays here; OPTIMIZATION_r13.md "CMS".)
+        # medians 0.29 s JVM vs 0.44 s Arrow at sf0.1 — so the hashing
+        # stays here; recorded in the message of commit 47cff25.)
         toks = tokenize_documents(
             spread_for_cpu(load(spark, sf_dir, "documents").select("text"))
         )

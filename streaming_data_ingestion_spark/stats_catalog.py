@@ -47,11 +47,16 @@ def analyze_with_snapshot(spark: SparkSession, table: str, path: str) -> None:
     """ANALYZE ``table`` and stamp WHICH data snapshot the stats
     describe (``path``'s mtime_ns). The maintenance cadence contract:
     run this after every load/compaction/stream commit that grows the
-    data, and snapshot-exact consumers get catalog counts for free."""
+    data, and snapshot-exact consumers get catalog counts for free.
+
+    The mtime is read BEFORE the ANALYZE: a write that lands while it
+    runs moves the file past the stamp, so the stamp reads stale and
+    consumers count inline rather than trust stats that may predate the
+    write."""
     import os
 
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
     mt = os.stat(path).st_mtime_ns
+    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
     spark.sql(
         f"ALTER TABLE {table} SET TBLPROPERTIES "
         f"('{STATS_MTIME_PROP}'='{mt}')"

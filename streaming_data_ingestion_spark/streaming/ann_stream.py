@@ -17,12 +17,10 @@ overwrite each other's slices) — and a replayed epoch
 re-delivers the identical assignment (frozen centroids + deterministic
 codes make the batch a pure function of its input), and the dynamic
 overwrite replaces exactly that epoch's slices instead of duplicating
-them (the streaming/ingest.py epoch_overwrite_writer discipline; the
-house rule applies — the option rides on the WRITE, never on the
-cloned session's conf). Probes are unaffected: ``cell`` remains the
-leading partition column, so PartitionFilters prune exactly as before
-and readers that select (vec_id, cell, codes, embedding) never see the
-epoch column.
+them (streaming/sink.overwrite_partitions). Probes are unaffected:
+``cell`` remains the leading partition column, so PartitionFilters
+prune exactly as before and readers that select (vec_id, cell, codes,
+embedding) never see the epoch column.
 
 The maintained invariant (pinned by tests/test_streaming.py): after any
 sequence of micro-batches with replays injected anywhere, the stored
@@ -35,9 +33,10 @@ epoch write is in flight could observe a TORN epoch — some cell
 partitions already renamed into place, others still pending (Spark's
 per-partition commit is not atomic across partitions, and there is no
 table-format transaction log under plain parquet). The fix is the
-minimal version-log discipline: the writer drops a driver-side commit
-marker (``_commits/<run>-<E>``, recording a total commit sequence) only
-AFTER the whole epoch's parquet write returns, and consistent readers
+minimal version-log discipline, streaming/sink.py's commit log: the
+writer drops a driver-side commit marker (``_commits/<seq>.<run>-<E>``,
+recording a total commit sequence) only AFTER the whole epoch's parquet
+write returns, and consistent readers
 go through ``read_committed_index``, which pins ``__epoch`` to the
 committed-token IN-list — a partition filter, so the in-flight epoch's
 files are pruned without being read.
@@ -53,17 +52,19 @@ from __future__ import annotations
 import json
 import os
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from streaming_data_ingestion_spark.compat import dlit_array
 from pyspark.sql.streaming import StreamingQuery
 
-_COMMITS_DIR = "_commits"  # leading "_" => invisible to parquet readers
-_COMMIT_MINT_LOCK = threading.Lock()  # serializes sequence minting
-_NS_CLAIM_PREFIX = "_ns."  # namespace → owner registration files
+from streaming_data_ingestion_spark.compat import dlit_array
+from streaming_data_ingestion_spark.streaming.sink import (
+    _claim_namespace,
+    _epoch_token,
+    committed_epochs,
+    mark_epoch_committed,
+    overwrite_partitions,
+    start,
+)
 
 
 def assign_to_centroids(
@@ -107,46 +108,6 @@ def assign_to_centroids(
     return coded.select(
         "vec_id", "cell", "codes", F.col("emb_keep").alias("embedding")
     )
-
-
-def _epoch_token(run_ns: str, epoch_id: int) -> str:
-    # a trailing '-' would make ns 'x-' epoch 5 parse as ns 'x' epoch
-    # '-5' in per-namespace readouts; '/' or NUL would break the marker
-    # filename; empty would collapse into the bare epoch number
-    if not run_ns or run_ns.endswith("-") or "/" in run_ns or "\x00" in run_ns:
-        raise ValueError(f"invalid run namespace: {run_ns!r}")
-    return f"{run_ns}-{int(epoch_id)}"
-
-
-def _claim_namespace(index_path: str, run_ns: str, owner: str) -> None:
-    """Register ``owner`` (the stream's checkpoint dir) as the holder of
-    ``run_ns`` in this index, or raise if a DIFFERENT owner already
-    holds it. Without this, a second stream reusing a namespace would
-    find the first run's commit markers and silently no-op its own
-    batches — its checkpoint would record them as processed while their
-    rows never landed (unrecoverable silent data loss). The claim makes
-    namespace reuse fail loudly instead, mirroring the bucketed-fact
-    writer's foreign-epoch refusal."""
-    commits = os.path.join(index_path, _COMMITS_DIR)
-    os.makedirs(commits, exist_ok=True)
-    claim = os.path.join(commits, _NS_CLAIM_PREFIX + run_ns)
-    with _COMMIT_MINT_LOCK:
-        if os.path.exists(claim):
-            with open(claim) as fh:
-                holder = fh.read().strip()
-            if holder != owner:
-                raise ValueError(
-                    f"run namespace {run_ns!r} of index {index_path!r} is "
-                    f"owned by checkpoint {holder!r}; this stream "
-                    f"(checkpoint {owner!r}) must use a fresh run_ns — "
-                    "epoch ids restart at 0 per checkpoint, so reusing a "
-                    "namespace would silently drop this stream's batches"
-                )
-            return
-        tmp = claim + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(owner)
-        os.replace(tmp, claim)
 
 
 def fold_in_writer(
@@ -207,85 +168,10 @@ def fold_in_writer(
         rows = assign_to_centroids(batch_df, centroids).withColumn(
             "__epoch", F.lit(token)
         )
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "__epoch")
-            .parquet(index_path)
-        )
+        overwrite_partitions(rows, index_path, "cell", "__epoch")
         mark_epoch_committed(index_path, epoch_id, run_ns)
 
     return write_batch
-
-
-def mark_epoch_committed(
-    index_path: str, epoch_id: int, run_ns: str = "default"
-) -> int:
-    """Drop the epoch's commit marker and return its commit SEQUENCE.
-    Called only after the epoch's parquet write has fully returned, so
-    the marker's existence implies every cell slice of the epoch is
-    renamed into place.
-
-    The sequence is encoded IN the marker filename
-    (``<seq zero-padded>.<token>``), so reading the commit log is one
-    directory listing — no per-marker file reads, O(1) round-trips on
-    object storage regardless of history length. Minting is serialized
-    by a process-level lock: concurrent foreachBatch callbacks of two
-    streams folding into the same index (separate driver threads in one
-    Spark application — the supported concurrency) cannot mint duplicate
-    sequence numbers. Cross-PROCESS concurrent committers remain out of
-    contract, as documented on vacuum/rebuild."""
-    with _COMMIT_MINT_LOCK:
-        commits = os.path.join(index_path, _COMMITS_DIR)
-        os.makedirs(commits, exist_ok=True)
-        token = _epoch_token(run_ns, epoch_id)
-        for seq, tok in committed_epochs(index_path):
-            if tok == token:  # completed-epoch replay keeps its seq
-                return seq
-        seq = last_commit_seq(index_path) + 1
-        marker = os.path.join(commits, f"{seq:012d}.{token}")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(token)
-        os.replace(tmp, marker)
-        return seq
-
-
-def committed_epochs(index_path: str) -> list[tuple[int, str]]:
-    """(seq, epoch_token) for every committed epoch, in commit order —
-    parsed from marker FILENAMES, one listdir total."""
-    commits = os.path.join(index_path, _COMMITS_DIR)
-    try:
-        names = os.listdir(commits)
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        if n.endswith(".tmp") or "." not in n:
-            continue
-        seq_s, _, token = n.partition(".")
-        if seq_s.isdigit() and token:
-            out.append((int(seq_s), token))
-    return sorted(out)
-
-
-def last_commit_seq(index_path: str) -> int:
-    """Highest commit sequence; -1 when nothing is committed yet."""
-    eps = committed_epochs(index_path)
-    return eps[-1][0] if eps else -1
-
-
-def last_committed_epoch(index_path: str, run_ns: str = "default") -> int:
-    """Highest committed epoch NUMBER within one run namespace; -1 when
-    that namespace has no commits (the per-run progress readout; global
-    snapshot order lives in the commit sequence)."""
-    prefix = run_ns + "-"
-    nums = [
-        int(tok[len(prefix):])
-        for _, tok in committed_epochs(index_path)
-        if tok.startswith(prefix) and tok[len(prefix):].isdigit()
-    ]
-    return max(nums, default=-1)
 
 
 def read_committed_index(
@@ -319,7 +205,6 @@ def maintain_ann_index(
     index_path: str,
     checkpoint_dir: str,
     centroids: list[tuple[int, list[float]]],
-    available_now: bool = True,
     run_ns: str = "default",
 ) -> StreamingQuery:
     """Continuously fold a vector stream into the stored IVFPQ index.
@@ -332,18 +217,11 @@ def maintain_ann_index(
     first one's epoch slices. The namespace is CLAIMED by this stream's
     checkpoint directory on first write, so accidental reuse fails
     loudly instead of silently dropping batches."""
-    writer = (
-        vectors_stream.writeStream.foreachBatch(
-            fold_in_writer(
-                index_path, centroids, run_ns, owner=checkpoint_dir
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start(
+        vectors_stream,
+        fold_in_writer(index_path, centroids, run_ns, owner=checkpoint_dir),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def index_history(spark: SparkSession, index_path: str) -> DataFrame:

@@ -13,7 +13,7 @@ stores ONE stats table and each micro-batch:
    (n_docs, sum_dl) — :func:`bm25_stats_partial`, the same tokenizer as
    the batch scorer so counts are bit-compatible;
 2. merges it into the stored table by summing, through the same
-   idempotent-replay machinery as the incremental MVs (streaming/mv.py):
+   idempotent merge as the incremental MVs (streaming/sink.py):
    per-partition epoch markers namespaced by the checkpoint's query id
    make at-least-once redelivery a no-op.
 
@@ -31,18 +31,12 @@ applied to retrieval — the third leg of the maintain→store→serve story
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from streaming_data_ingestion_spark.queries.llm_text import _tokens
-from streaming_data_ingestion_spark.streaming.mv import (
-    _merge_idempotent,
-    _query_ns,
-    _resolve_ns,
-)
+from streaming_data_ingestion_spark.streaming.sink import merge_additive, start
 
 # Stored schema: (kind, term, n). kind='df' rows carry per-term document
 # frequencies; kind='meta' rows carry term∈{'n_docs','sum_dl'}. The kind
@@ -71,23 +65,20 @@ def bm25_stats_partial(batch_df: DataFrame) -> DataFrame:
     return df_rows.unionByName(meta)
 
 
-def merge_bm25_stats(
-    table_path: str, run_ns: str | Callable[[], str] | None = None
-):
+def merge_bm25_stats(table_path: str, run_ns: str | None = None):
     """foreachBatch writer: sum this batch's stats partial into the
     stored table, partitioned by ``kind``. Idempotent under epoch replay
     via the shared per-partition marker protocol."""
-    ns_cache: dict = {}
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_idempotent(
+        merge_additive(
             bm25_stats_partial(batch_df),
             table_path,
             key_cols=["kind", "term"],
             sum_cols=["n"],
             part_cols=["kind"],
             epoch_id=epoch_id,
-            run_ns=_resolve_ns(ns_cache, run_ns),
+            run_ns=run_ns,
         )
 
     return write_batch
@@ -97,21 +88,8 @@ def maintain_bm25_stats(
     docs_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain the BM25 corpus statistics from a documents
     stream. Read the table as plain parquet at ``table_path``; serve
     scores with queries/serving.py's stored-stats scorer."""
-    spark = docs_stream.sparkSession
-    writer = (
-        docs_stream.writeStream.foreachBatch(
-            merge_bm25_stats(
-                table_path, run_ns=lambda: _query_ns(spark, checkpoint_dir)
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(docs_stream, merge_bm25_stats(table_path), checkpoint_dir)

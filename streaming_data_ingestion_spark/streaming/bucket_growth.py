@@ -14,11 +14,11 @@ under its own ``epoch=N`` hive partition, so
   so a crashed/retried micro-batch REPLACES its directory instead of
   double-appending.
 
-Replay protocol (the house `_merge_idempotent` contract, adapted to
-append-only facts): a completed epoch leaves a marker file; a replay of
-a completed epoch is a no-op, and a replay of an UNMARKED epoch first
-deletes the partial ``epoch=N`` directory (crash debris), then appends
-the batch whole. NEVER use ``insertInto`` here: on a bucketed catalog
+Replay protocol (streaming/sink.py's commit log for append-only
+sinks, shared with the ANN fold-in): a completed epoch leaves a commit
+marker; a replay of a committed epoch is a no-op, and a replay of an
+UNCOMMITTED epoch first deletes the partial ``epoch=N`` directory (crash
+debris), then appends the batch whole. NEVER use ``insertInto`` here: on a bucketed catalog
 table it can silently bypass the bucket spec and (with mode=overwrite)
 truncate sibling partitions — files that lie about their bucket id make
 the exchange-free merge join return WRONG rows while the plan still
@@ -33,8 +33,17 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark.streaming.sink import (
+    _epoch_token,
+    committed_epochs,
+    mark_epoch_committed,
+)
+
 _EPOCH_PART = "epoch"
-_MARKER_DIR = "_epoch_markers"
+
+
+def _epoch_of(token: str) -> int:
+    return int(token.rpartition("-")[2])
 
 
 def bucketed_growth_writer(
@@ -50,13 +59,10 @@ def bucketed_growth_writer(
     partitioned by epoch, bucketed ``n_buckets`` ways on
     ``bucket_cols`` — idempotently under micro-batch replay."""
 
-    marker_dir = os.path.join(path, _MARKER_DIR)
-
-    def _marker(epoch_id: int) -> str:
-        return os.path.join(marker_dir, f"{run_ns}-{int(epoch_id)}.done")
-
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if os.path.exists(_marker(epoch_id)):
+        token = _epoch_token(run_ns, epoch_id)
+        done = [tok for _, tok in committed_epochs(path)]
+        if token in done:
             return  # completed-epoch replay: no-op
         spark = batch_df.sparkSession
         part_dir = os.path.join(path, f"{_EPOCH_PART}={int(epoch_id)}")
@@ -66,16 +72,7 @@ def bucketed_growth_writer(
             # run (different run_ns) writing this table would land its
             # epoch in the same directory — deleting it here would be
             # silent data loss, not recovery. One epoch id, one owner.
-            try:
-                markers = os.listdir(marker_dir)
-            except OSError:
-                markers = []
-            suffix = f"-{int(epoch_id)}.done"
-            foreign = [
-                m
-                for m in markers
-                if m.endswith(suffix) and m != os.path.basename(_marker(epoch_id))
-            ]
+            foreign = [t for t in done if _epoch_of(t) == int(epoch_id)]
             if foreign:
                 raise ValueError(
                     f"epoch {epoch_id} of table {table!r} is committed by "
@@ -83,8 +80,8 @@ def bucketed_growth_writer(
                     "replace it — use a fresh run_ns per logical stream, "
                     "or a fresh table for an independent rebuild"
                 )
-            # unmarked partial write from OUR crashed attempt: the epoch
-            # owns its directory, so replace it whole. (The catalog
+            # uncommitted partial write from OUR crashed attempt: the
+            # epoch owns its directory, so replace it whole. (The catalog
             # entry may not exist yet if the very first epoch crashed
             # between writing data files and registering the table —
             # REFRESH would then raise and wedge the stream forever.)
@@ -103,59 +100,27 @@ def bucketed_growth_writer(
         if sort_cols:
             w = w.sortBy(*sort_cols)
         w.option("path", path).saveAsTable(table, format="parquet")
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(_marker(epoch_id), "w", encoding="utf-8") as f:
-            f.write("done\n")
+        mark_epoch_committed(path, epoch_id, run_ns)
 
     return write_batch
-
-
-def _marked_epochs(path: str) -> dict[int, str]:
-    """epoch -> owning run namespace, parsed from every marker file.
-    One epoch id has exactly one owner (write_batch refuses foreign
-    replacements), so the union across namespaces is well-defined."""
-    marker_dir = os.path.join(path, _MARKER_DIR)
-    try:
-        names = os.listdir(marker_dir)
-    except OSError:
-        return {}
-    out: dict[int, str] = {}
-    for n in names:
-        if not n.endswith(".done"):
-            continue
-        stem = n[: -len(".done")]
-        ns, sep, e = stem.rpartition("-")
-        if sep and e.isdigit():
-            out[int(e)] = ns
-    return out
-
-
-def last_committed_epoch(path: str, run_ns: str = "default") -> int:
-    """Highest epoch whose marker exists for this run namespace; -1 when
-    none. A marker is written only after ``saveAsTable`` fully returns,
-    so it implies the epoch's whole partition directory is in place."""
-    return max(
-        (e for e, ns in _marked_epochs(path).items() if ns == run_ns),
-        default=-1,
-    )
 
 
 def read_committed_facts(
     spark: SparkSession, table: str, path: str
 ) -> DataFrame:
     """Consistent snapshot of the growing bucketed fact table: only rows
-    of marker-committed epochs — across ALL run namespaces, so a reader
+    of committed epochs — across ALL run namespaces, so a reader
     needs no knowledge of which stream wrote which epoch (a
     namespace-scoped cap would silently return an empty snapshot to any
     consumer guessing the wrong namespace). The same torn-read hazard as
     the ANN fold-in (streaming/ann_stream.py) applies here — crash
-    debris or an in-flight append leaves an unmarked ``epoch=N``
+    debris or an in-flight append leaves an uncommitted ``epoch=N``
     directory that a raw ``spark.table`` read would include. ``epoch``
     is the partition column and the committed set is a literal IN-list
     over it, so the bound is a PartitionFilter (the torn directory is
     pruned unread), and filtering a partition column does NOT disturb
     the bucket-hash distribution on the join key — joins through this
     view stay exchange-free (pinned in tests/test_layout.py)."""
-    epochs = sorted(_marked_epochs(path))
+    epochs = sorted({_epoch_of(tok) for _, tok in committed_epochs(path)})
     bound = F.col(_EPOCH_PART).isin(epochs) if epochs else F.lit(False)
     return spark.table(table).filter(bound)

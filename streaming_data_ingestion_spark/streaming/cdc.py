@@ -31,6 +31,7 @@ from streaming_data_ingestion_spark.backfill import (
     delete_keys_partitioned,
     upsert_partitioned,
 )
+from streaming_data_ingestion_spark.streaming.sink import start
 
 
 def apply_cdc_stream(
@@ -39,7 +40,6 @@ def apply_cdc_stream(
     key: str,
     part_col: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the apply loop; ``changes`` must carry an ``op`` column."""
 
@@ -54,11 +54,4 @@ def apply_cdc_stream(
         if dels.limit(1).count():
             delete_keys_partitioned(spark, table_path, dels, key, part_col)
 
-    writer = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(changes, apply_batch, checkpoint_dir)

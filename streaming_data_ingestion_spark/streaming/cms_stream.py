@@ -11,9 +11,9 @@ stores one 4×1024 grid table and each micro-batch:
    ≤ 4096 rows — queries/sketches.cms_grid_partial, the same tokenization
    and hashing as the batch sketch, so grids are bit-compatible),
 2. merges it into the stored grid by summing cell counts, through the
-   same idempotent-replay machinery as the incremental MVs
-   (streaming/mv.py): per-partition epoch markers namespaced by the
-   checkpoint's query id make at-least-once redelivery a no-op.
+   same idempotent merge as the incremental MVs (streaming/sink.py):
+   per-partition epoch markers namespaced by the checkpoint's query id
+   make at-least-once redelivery a no-op.
 
 The maintained invariant (pinned by tests/test_streaming.py): after any
 sequence of micro-batches, with replays injected anywhere, the stored
@@ -30,7 +30,9 @@ two sketches a streaming corpus dashboard maintains side by side.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,11 +43,7 @@ from streaming_data_ingestion_spark.queries.sketches import (
     _bucket,
     cms_grid_partial,
 )
-from streaming_data_ingestion_spark.streaming.mv import (
-    _merge_idempotent,
-    _query_ns,
-    _resolve_ns,
-)
+from streaming_data_ingestion_spark.streaming.sink import merge_additive, start
 
 
 def _shape_path(table_path: str) -> str:
@@ -57,19 +55,16 @@ def _shape_path(table_path: str) -> str:
 
 def _read_shape(spark: SparkSession, table_path: str) -> tuple[int, int] | None:
     """The persisted grid shape, or None ONLY when the sidecar does not
-    exist (a table that predates it, or a first merge racing the
-    publish). Any other failure — a transient read error, a corrupt
-    sidecar — re-raises: swallowing it would let a mis-configured writer
-    treat the table as legacy, publish ITS shape over the correct
-    sidecar, and merge mis-shaped partials — the exact corruption the
-    guard exists to prevent (ADVICE r12)."""
+    exist (a table that predates it). Any other failure — a transient
+    read error, a corrupt sidecar — re-raises: swallowing it would let a
+    mis-configured writer treat the table as legacy, publish ITS shape
+    over the correct sidecar, and merge mis-shaped partials — the exact
+    corruption the guard exists to prevent (ADVICE r12)."""
     from pyspark.errors import AnalysisException
 
     try:
         row = spark.read.parquet(_shape_path(table_path)).collect()[0]
         return int(row["width"]), int(row["depth"])
-    except FileNotFoundError:
-        return None
     except AnalysisException as e:
         getter = getattr(e, "getCondition", None) or getattr(
             e, "getErrorClass", lambda: None
@@ -81,15 +76,27 @@ def _read_shape(spark: SparkSession, table_path: str) -> tuple[int, int] | None:
 
 def _publish_shape(
     spark: SparkSession, table_path: str, width: int, depth: int
-) -> None:
+) -> tuple[int, int] | None:
+    """Publish the grid shape atomically: write a temp directory, then
+    rename it into place, so a reader sees no sidecar or a whole one —
+    never a half-written directory. If another writer published first,
+    the rename fails and its shape is returned for validation."""
+    final = _shape_path(table_path)
+    tmp = f"{final}.tmp-{uuid.uuid4().hex}"
     spark.createDataFrame(
         [(int(width), int(depth))], "width int, depth int"
-    ).coalesce(1).write.mode("overwrite").parquet(_shape_path(table_path))
+    ).coalesce(1).write.parquet(tmp)
+    try:
+        os.rename(tmp, final)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        return _read_shape(spark, table_path)
+    return int(width), int(depth)
 
 
 def merge_cms_grid(
     table_path: str,
-    run_ns: str | Callable[[], str] | None = None,
+    run_ns: str | None = None,
     width: int | None = None,
     depth: int | None = None,
 ):
@@ -111,30 +118,30 @@ def merge_cms_grid(
 
     w = _sk._CMS_WIDTH if width is None else width
     d = _CMS_DEPTH if depth is None else depth
-    ns_cache: dict = {}
     shape_ok: list[bool] = []  # per-writer memo: validate/publish once
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not shape_ok:
-            stored = _read_shape(batch_df.sparkSession, table_path)
-            if stored is not None and stored != (w, d):
+            spark = batch_df.sparkSession
+            stored = _read_shape(spark, table_path) or _publish_shape(
+                spark, table_path, w, d
+            )
+            if stored != (w, d):
                 raise ValueError(
                     f"grid at {table_path} is maintained with shape "
                     f"{stored[1]}x{stored[0]} (depth x width) but this "
                     f"writer is configured {d}x{w} — refusing to merge "
                     f"mis-shaped partials"
                 )
-            if stored is None:
-                _publish_shape(batch_df.sparkSession, table_path, w, d)
             shape_ok.append(True)
-        _merge_idempotent(
+        merge_additive(
             cms_grid_partial(batch_df, width=w, depth=d),
             table_path,
             key_cols=["r", "bucket"],
             sum_cols=["n"],
             part_cols=["r"],
             epoch_id=epoch_id,
-            run_ns=_resolve_ns(ns_cache, run_ns),
+            run_ns=run_ns,
         )
 
     return write_batch
@@ -144,24 +151,11 @@ def maintain_cms_grid(
     docs_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain the Count-Min grid from a documents stream.
     Read the grid as plain parquet at ``table_path``; estimate with
     :func:`estimate_tokens`."""
-    spark = docs_stream.sparkSession
-    writer = (
-        docs_stream.writeStream.foreachBatch(
-            merge_cms_grid(
-                table_path, run_ns=lambda: _query_ns(spark, checkpoint_dir)
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(docs_stream, merge_cms_grid(table_path), checkpoint_dir)
 
 
 def estimate_tokens(

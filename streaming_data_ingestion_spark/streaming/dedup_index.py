@@ -8,10 +8,10 @@ batch, not earlier in this batch — and appends the novel digests to the
 index so later batches (and later runs over the same checkpoint) dedup
 against them.
 
-Exactly-once mechanics (the repo's epoch-partition pattern,
-streaming/ingest.py): both the survivor output and the index append
-land in ``epoch=N`` partitions via dynamic overwrite, so a replayed
-micro-batch rewrites ITS OWN partitions instead of double-appending.
+Exactly-once mechanics (streaming/sink.overwrite_partitions): both the
+survivor output and the index append land in ``epoch=N`` partitions via
+dynamic overwrite, so a replayed micro-batch rewrites ITS OWN
+partitions instead of double-appending.
 The membership probe reads the index as of the PREVIOUS epochs — a
 failed attempt's partial epoch partition is overwritten by its replay
 before any later epoch can exist, so replays converge to the same
@@ -30,6 +30,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 from pyspark.sql.streaming import StreamingQuery
 
+from streaming_data_ingestion_spark.streaming.sink import (
+    overwrite_partitions,
+    start,
+)
+
 
 def _digest(col: str = "text"):
     # identical normalization to q_dedup_exact (queries/llm_text.py): the
@@ -42,7 +47,6 @@ def dedup_against_index(
     index_path: str,
     out_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Emit only never-seen-before documents; grow the digest index."""
 
@@ -74,30 +78,19 @@ def dedup_against_index(
             novel = batch  # first epoch ever: no index yet
         novel = novel.persist()
         try:
-            (
-                novel.select("doc_id", "text", "digest")
-                .withColumn("epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(out_path)
+            overwrite_partitions(
+                novel.select("doc_id", "text", "digest").withColumn(
+                    "epoch", F.lit(epoch_id)
+                ),
+                out_path,
+                "epoch",
             )
-            (
-                novel.select("digest")
-                .withColumn("epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(index_path)
+            overwrite_partitions(
+                novel.select("digest").withColumn("epoch", F.lit(epoch_id)),
+                index_path,
+                "epoch",
             )
         finally:
             novel.unpersist()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(docs_stream, write_batch, checkpoint_dir)

@@ -38,6 +38,10 @@ from streaming_data_ingestion_spark.queries.llm_dedup import (
     _shingles,
     _tokens,
 )
+from streaming_data_ingestion_spark.streaming.sink import (
+    overwrite_partitions,
+    start,
+)
 
 
 def _affine_min(a: int, b: int) -> Column:
@@ -86,7 +90,6 @@ def flag_neardups(
     historical_bands: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously flag incoming docs that share ANY LSH band with the
     historical corpus. Flags land as parquet (doc_id) rows in
@@ -106,23 +109,13 @@ def flag_neardups(
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # epoch-keyed dynamic overwrite: a replayed micro-batch rewrites
-        # ITS OWN epoch partition instead of appending duplicates — the
-        # same idempotence pattern as streaming/ingest.py's sink
-        (
+        # ITS OWN epoch partition instead of appending duplicates
+        overwrite_partitions(
             batch_df.select("doc_id")
             .distinct()
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out_dir)
+            .withColumn("epoch", F.lit(epoch_id)),
+            out_dir,
+            "epoch",
         )
 
-    writer = (
-        flagged.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(flagged, write_batch, checkpoint_dir)

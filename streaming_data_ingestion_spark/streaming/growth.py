@@ -9,11 +9,10 @@ first_day) index answers "is this user new?" per micro-batch without
 ever rescanning history, and a (day, new_users) table accumulates the
 growth curve a dashboard reads directly.
 
-Exactly-once mechanics are the repo's epoch-partition pattern
-(streaming/ingest.py, streaming/dedup_index.py): the index appends land
-in ``epoch=N`` partitions via dynamic overwrite, so a replayed
+Exactly-once mechanics are streaming/sink.py's: the index appends land
+in ``epoch=N`` partitions via ``overwrite_partitions``, so a replayed
 micro-batch rewrites ITS OWN partition instead of double-appending; the
-day counts go through streaming/mv.py's replay-skip merge.
+day counts go through ``merge_additive``'s replay-skip merge.
 
 Scale shape: the only per-batch wide work is one user-keyed aggregate
 over the batch plus one anti join of the batch's candidate users
@@ -29,10 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
-from streaming_data_ingestion_spark.streaming.mv import (
-    _merge_idempotent,
-    _query_ns,
-    _resolve_ns,
+from streaming_data_ingestion_spark.streaming.sink import (
+    merge_additive,
+    overwrite_partitions,
+    start,
 )
 
 
@@ -56,12 +55,11 @@ def _prior_index(spark: SparkSession, index_path: str, epoch_id: int):
 def first_seen_batch_writer(
     index_path: str,
     daily_path: str,
-    run_ns=None,
+    run_ns: str | None = None,
 ):
     """foreachBatch writer for the first-seen index + daily growth table
     (exposed separately, ``mv.merge_daily_counts``-style, so tests can
     drive epoch replay directly)."""
-    ns_cache: dict = {}
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -76,21 +74,10 @@ def first_seen_batch_writer(
             )
         cand = cand.withColumn("epoch", F.lit(epoch_id)).persist()
         try:
-            # index append: replayed epochs overwrite their own partition.
-            # NB: the dynamic mode MUST be a per-write .option — setting
-            # it on `spark.conf` inside foreachBatch mutates the OUTER
-            # session while batch_df executes on a cloned session whose
-            # conf stays STATIC, so the write would truncate the whole
-            # index every epoch (round-5 incident; see
-            # tests/test_plans.py guard).
-            (
-                cand.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(index_path)
-            )
+            # index append: replayed epochs overwrite their own partition
+            overwrite_partitions(cand, index_path, "epoch")
             # daily growth counts: replay-skip merge keyed on (day)
-            _merge_idempotent(
+            merge_additive(
                 cand.groupBy(F.col("first_day").alias("day")).agg(
                     F.count(F.lit(1)).cast("long").alias("new_users")
                 ),
@@ -99,7 +86,7 @@ def first_seen_batch_writer(
                 sum_cols=["new_users"],
                 part_cols=["day"],
                 epoch_id=epoch_id,
-                run_ns=_resolve_ns(ns_cache, run_ns),
+                run_ns=run_ns,
             )
         finally:
             cand.unpersist()
@@ -112,7 +99,6 @@ def maintain_first_seen(
     index_path: str,
     daily_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the first-seen user index + the daily new-user table.
 
@@ -121,21 +107,11 @@ def maintain_first_seen(
     per-user signup days from ``index_path`` — both O(users/calendar),
     no event-history rescan ever.
     """
-    spark = events_stream.sparkSession
-    write_batch = first_seen_batch_writer(
-        index_path,
-        daily_path,
-        run_ns=lambda: _query_ns(spark, checkpoint_dir),
+    return start(
+        events_stream,
+        first_seen_batch_writer(index_path, daily_path),
+        checkpoint_dir,
     )
-
-    writer = (
-        events_stream.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cum_uniques_from_daily(spark: SparkSession, daily_path: str) -> DataFrame:

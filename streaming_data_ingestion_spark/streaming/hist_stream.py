@@ -11,8 +11,8 @@ mergeable by plain ADDITION, so each micro-batch:
 1. bins ITS OWN rows into the fixed [lo, hi)×bins grid (map-side
    combined to ≤ bins+2 rows, under/overflow bins included),
 2. sums the partial into the stored histogram through the idempotent
-   MV merge (streaming/mv.py) — replay-safe via per-partition epoch
-   markers.
+   merge (streaming/sink.merge_additive) — replay-safe via
+   per-partition epoch markers.
 
 Quantiles are then served from the ≤ bins+2-row table with linear
 interpolation inside the hit bin: a rank-error bound of one bin width,
@@ -29,17 +29,11 @@ and at 100 TB the value domain of a metric column is known.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from streaming_data_ingestion_spark.streaming.mv import (
-    _merge_idempotent,
-    _query_ns,
-    _resolve_ns,
-)
+from streaming_data_ingestion_spark.streaming.sink import merge_additive, start
 
 _BINS = 256
 _PART_WIDTH = 64  # bins per storage partition directory
@@ -79,22 +73,21 @@ def merge_value_hist(
     lo: float,
     hi: float,
     bins: int = _BINS,
-    run_ns: str | Callable[[], str] | None = None,
+    run_ns: str | None = None,
 ):
     """foreachBatch writer: sum this batch's bin counts into the stored
     histogram. Idempotent under epoch replay via the shared marker
     protocol."""
-    ns_cache: dict = {}
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_idempotent(
+        merge_additive(
             hist_partial(batch_df, col, lo, hi, bins),
             table_path,
             key_cols=["pk", "bin"],
             sum_cols=["n"],
             part_cols=["pk"],
             epoch_id=epoch_id,
-            run_ns=_resolve_ns(ns_cache, run_ns),
+            run_ns=run_ns,
         )
 
     return write_batch
@@ -108,25 +101,15 @@ def maintain_value_hist(
     lo: float,
     hi: float,
     bins: int = _BINS,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain the value histogram from a stream. Read the
     table as plain parquet; answer quantiles with
     :func:`quantiles_from_hist`."""
-    spark = stream.sparkSession
-    writer = (
-        stream.writeStream.foreachBatch(
-            merge_value_hist(
-                table_path, col, lo, hi, bins,
-                run_ns=lambda: _query_ns(spark, checkpoint_dir),
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start(
+        stream,
+        merge_value_hist(table_path, col, lo, hi, bins),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def quantiles_from_hist(

@@ -28,6 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from streaming_data_ingestion_spark.sources.json_stream import USERS_WIRE_SCHEMA
+from streaming_data_ingestion_spark.streaming.sink import (
+    overwrite_partitions,
+    start,
+)
 
 
 def decode_users(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -62,7 +66,6 @@ def run_ingest(
     decoded: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Checkpointed micro-batch append into parquet via foreachBatch.
 
@@ -79,14 +82,7 @@ def run_ingest(
         # (/root/reference/spark-streaming.py:193-197)
         batch_df.write.mode("append").parquet(out_dir)
 
-    writer = (
-        decoded.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(decoded, write_batch, checkpoint_dir)
 
 
 def epoch_overwrite_writer(out_dir: str):
@@ -101,12 +97,10 @@ def epoch_overwrite_writer(out_dir: str):
     """
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(out_dir)
+        overwrite_partitions(
+            batch_df.withColumn("__epoch", F.lit(int(epoch_id))),
+            out_dir,
+            "__epoch",
         )
 
     return write_batch
@@ -116,18 +110,10 @@ def run_ingest_exactly_once(
     decoded: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Checkpointed ingest with an epoch-idempotent sink (see
     :func:`epoch_overwrite_writer`)."""
-    writer = (
-        decoded.writeStream.foreachBatch(epoch_overwrite_writer(out_dir))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(decoded, epoch_overwrite_writer(out_dir), checkpoint_dir)
 
 
 def ingest_users_from_json_dir(
@@ -171,26 +157,21 @@ def dlq_writer(out_dir: str, dlq_dir: str):
         batch_df.persist()
         try:
             ok = F.col("data").isNotNull() & F.col("data.full_name").isNotNull()
-            (
+            overwrite_partitions(
                 batch_df.filter(ok)
                 .select("data.*")
                 .withColumn("user_id", F.expr("uuid()"))
-                .withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__epoch")
-                .parquet(out_dir)
+                .withColumn("__epoch", F.lit(int(epoch_id))),
+                out_dir,
+                "__epoch",
             )
-            (
-                batch_df.filter(~ok)
-                .select(
+            overwrite_partitions(
+                batch_df.filter(~ok).select(
                     F.col("_raw").alias("raw"),
                     F.lit(int(epoch_id)).alias("epoch"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(dlq_dir)
+                ),
+                dlq_dir,
+                "epoch",
             )
         finally:
             batch_df.unpersist()
@@ -204,18 +185,11 @@ def run_ingest_with_dlq(
     out_dir: str,
     dlq_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """End-to-end ingest with dead-letter routing: raw text lines →
     decode-with-raw → valid records to the main sink, malformed lines to
     the DLQ — checkpointed, so neither path re-processes on restart."""
     raw = spark.readStream.text(in_dir)
-    writer = (
-        split_users_with_raw(raw)
-        .writeStream.foreachBatch(dlq_writer(out_dir, dlq_dir))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start(
+        split_users_with_raw(raw), dlq_writer(out_dir, dlq_dir), checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

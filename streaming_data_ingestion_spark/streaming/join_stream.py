@@ -103,7 +103,6 @@ def maintain_conversions(
     checkpoint_dir: str,
     window_s: int = DEFAULT_WINDOW_S,
     watermark: str = "30 days",
-    available_now: bool = True,
     how: str = "inner",
 ) -> StreamingQuery:
     """Continuously materialize the conversion-pair table from two event
@@ -112,12 +111,11 @@ def maintain_conversions(
     pairs = conversion_pairs(
         clicks_stream, purchases_stream, window_s, watermark, how
     )
-    writer = (
+    return (
         pairs.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -13,17 +13,12 @@ Cost per refresh is O(batch + touched-partition), independent of table
 history — the property that makes a continuously-maintained 100 TB
 rollup feasible. Exactly-once under replay: a read-merge-overwrite is
 NOT naturally idempotent (re-running an epoch whose write already landed
-would re-add the delta), so every stored row carries a ``last_epoch``
-marker; a replayed epoch skips any PARTITION TUPLE (all partition
-columns, e.g. ``(grain, day)`` — not just the day) already stamped with
-its own marker and merges only the rest — per-partition idempotence even
-when a crash landed some partitions but not others (e.g. the hour grain
-of a day landed but the day grain did not). Markers are namespaced by
-the streaming query id recorded in the checkpoint's ``metadata`` file
-(stable across restarts of the same checkpoint, fresh for a new or reset
-checkpoint), so a new run whose foreachBatch epochs restart at 0 can
-never collide with a stamp left by an earlier run. The checkpoint
-prevents cross-restart re-processing.
+would re-add the delta), so each merge goes through
+``streaming/sink.merge_additive``: every stored row carries a
+``last_epoch`` marker ``"<query id>:<epoch>"``, and a replayed epoch
+skips any PARTITION TUPLE already stamped with its own marker. The query
+id is the one the checkpoint records, so a new checkpoint whose epochs
+restart at 0 never collides with an earlier run's stamps.
 
 The invariant the test pins: after any sequence of micro-batches, the
 maintained table EQUALS the from-scratch batch aggregate over the same
@@ -33,191 +28,12 @@ consistency materialized.
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable
-
-from pyspark.errors import AnalysisException
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from streaming_data_ingestion_spark.compat import DEC
-
-_EPOCH_COL = "last_epoch"
-
-
-def _part_member(part_cols: list[str], tuples: list[tuple]) -> Column:
-    """Null-safe membership predicate over the full partition tuple.
-
-    ``isin`` never matches NULL, which would silently drop an existing
-    null-valued partition's counts from the merge while the delta still
-    overwrote that partition — so NULL components compare via isNull.
-    The predicate is an OR over the touched tuples: a micro-batch
-    touches O(days-in-batch × grains) partitions, which stays small by
-    construction, so predicate size is bounded regardless of table or
-    batch row count."""
-    conds: list[Column] = []
-    for t in tuples:
-        eq: Column | None = None
-        for c, v in zip(part_cols, t):
-            p = F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            eq = p if eq is None else (eq & p)
-        assert eq is not None
-        conds.append(eq)
-    if not conds:
-        return F.lit(False)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
-    return out
-
-
-def _query_ns(spark: SparkSession, checkpoint_dir: str) -> str:
-    """Stable identity of the epoch counter: the streaming query id from
-    the checkpoint's ``metadata`` file. Written at first start, preserved
-    across restarts of the same checkpoint, and fresh whenever the
-    checkpoint is new or reset — exactly the lifetime over which
-    foreachBatch epoch ids are monotone. Read through Spark's reader so
-    it works on any Hadoop-supported filesystem, not just local disk."""
-    row = spark.read.text(checkpoint_dir.rstrip("/") + "/metadata").head()
-    return str(json.loads(row["value"])["id"])
-
-
-def _migrate_legacy_markers(
-    spark: SparkSession, table_path: str, part_cols: list[str]
-) -> None:
-    """One-time format migration: early versions stamped ``last_epoch``
-    as a LONG (``F.lit(epoch_id)``); the marker is now a STRING
-    (``run_ns:epoch``). A dynamic partition overwrite that lands string
-    markers next to legacy long partitions would leave a mixed-type
-    column across partitions and brick the next ``spark.read.parquet``
-    on schema merge — so before the first merge into a table whose
-    schema still says a non-string marker, rewrite it once with the
-    marker cast to string (same partition layout). Steady state is a
-    footer-only schema probe; the full-table rewrite runs at most once
-    per legacy table ever. Cannot clash with concurrent epochs: the
-    caller is the foreachBatch merge, which Spark serializes per query.
-    """
-    if table_path in _MARKER_OK:  # probe once per table per process
-        return
-    try:
-        tbl = spark.read.parquet(table_path)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return
-        raise
-    types = {f.name: f.dataType.simpleString() for f in tbl.schema.fields}
-    if types.get(_EPOCH_COL) in (None, "string"):
-        _MARKER_OK.add(table_path)
-        return
-    migrated = tbl.withColumn(_EPOCH_COL, F.col(_EPOCH_COL).cast("string"))
-    tmp = table_path.rstrip("/") + "__marker_migration"
-    migrated.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
-    (
-        spark.read.parquet(tmp)
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(table_path)
-    )
-    _rm_path(spark, tmp)
-    _MARKER_OK.add(table_path)
-
-
-_MARKER_OK: set[str] = set()
-
-
-def _rm_path(spark: SparkSession, path: str) -> None:
-    """Delete a staging directory via Hadoop's FileSystem API (works on
-    any supported filesystem, not just local disk)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-def _read_existing(spark: SparkSession, table_path: str, member):
-    """Read the touched slice of the table; None only if the table truly
-    does not exist yet. Any OTHER read failure propagates — swallowing a
-    transient listing error here would make the merge treat a populated
-    table as empty and dynamically overwrite history with one batch's
-    delta."""
-    try:
-        return spark.read.parquet(table_path).filter(member)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
-
-
-def _merge_idempotent(
-    delta: DataFrame,
-    table_path: str,
-    key_cols: list[str],
-    sum_cols: list[str],
-    part_cols: list[str],
-    epoch_id: int,
-    run_ns: str | None = None,
-) -> None:
-    """Shared merge core: per-PARTITION-TUPLE epoch markers make
-    micro-batch replay a no-op for exactly the partitions the same epoch
-    already wrote. Keying the applied set on the full tuple (not a single
-    column) matters when ``part_cols`` is composite: a crash that landed
-    ``(grain=1h, day=d)`` but not ``(grain=1d, day=d)`` must replay the
-    day-grain partition rather than see day ``d`` stamped and skip it."""
-    spark = delta.sparkSession
-    marker = f"{run_ns}:{epoch_id}" if run_ns is not None else str(epoch_id)
-    _migrate_legacy_markers(spark, table_path, part_cols)
-    delta.persist()
-    existing = None
-    try:
-        touched = [
-            tuple(r[c] for c in part_cols)
-            for r in delta.select(*part_cols).distinct().collect()
-        ]
-        if not touched:
-            return
-        existing = _read_existing(
-            spark, table_path, _part_member(part_cols, touched)
-        )
-        if existing is not None:
-            existing.persist()
-            applied = {
-                tuple(r[c] for c in part_cols)
-                for r in existing.filter(F.col(_EPOCH_COL) == marker)
-                .select(*part_cols)
-                .distinct()
-                .collect()
-            }
-        else:
-            applied = set()
-        merge_parts = [t for t in touched if t not in applied]
-        if not merge_parts:
-            return  # full replay: every touched partition already stamped
-        member = _part_member(part_cols, merge_parts)
-        delta_m = delta.filter(member)
-        if existing is not None:
-            merged = (
-                delta_m.unionByName(existing.filter(member).drop(_EPOCH_COL))
-                .groupBy(*key_cols)
-                .agg(*[F.sum(c).alias(c) for c in sum_cols])
-            )
-        else:
-            merged = delta_m
-        (
-            merged.withColumn(_EPOCH_COL, F.lit(marker))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(table_path)
-        )
-    finally:
-        if existing is not None:
-            existing.unpersist()
-        delta.unpersist()
+from streaming_data_ingestion_spark.streaming.sink import merge_additive, start
 
 
 def _daily_counts(df: DataFrame) -> DataFrame:
@@ -228,33 +44,19 @@ def _daily_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_ns(
-    cache: dict, run_ns: str | Callable[[], str] | None
-) -> str | None:
-    """Resolve (once) a namespace that may be a deferred callable — the
-    checkpoint ``metadata`` file only exists after the query starts, so
-    maintain_* pass a lazy reader rather than a value."""
-    if "v" not in cache:
-        cache["v"] = run_ns() if callable(run_ns) else run_ns
-    return cache["v"]
-
-
-def merge_daily_counts(
-    table_path: str, run_ns: str | Callable[[], str] | None = None
-):
+def merge_daily_counts(table_path: str, run_ns: str | None = None):
     """foreachBatch writer: merge this batch's partial daily counts into
     the parquet table, touching only the affected day partitions."""
-    ns_cache: dict = {}
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_idempotent(
+        merge_additive(
             _daily_counts(batch_df),
             table_path,
             key_cols=["day", "event_type"],
             sum_cols=["n"],
             part_cols=["day"],
             epoch_id=epoch_id,
-            run_ns=_resolve_ns(ns_cache, run_ns),
+            run_ns=run_ns,
         )
 
     return write_batch
@@ -264,23 +66,12 @@ def maintain_daily_counts(
     events_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain the daily (day, event_type, n) rollup from
     an events stream. Read the result as plain parquet at ``table_path``."""
-    spark = events_stream.sparkSession
-    writer = (
-        events_stream.writeStream.foreachBatch(
-            merge_daily_counts(
-                table_path, run_ns=lambda: _query_ns(spark, checkpoint_dir)
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start(
+        events_stream, merge_daily_counts(table_path), checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------------------------------------------
@@ -324,26 +115,23 @@ def _rollup(df: DataFrame) -> DataFrame:
     )
 
 
-def merge_rollup(
-    table_path: str, run_ns: str | Callable[[], str] | None = None
-):
+def merge_rollup(table_path: str, run_ns: str | None = None):
     """foreachBatch writer: merge this batch's partial two-grain rollup
     into the parquet table, dynamically overwriting only the touched
     (grain, day) partitions — O(batch + touched-partition) per refresh,
     independent of history, and idempotent under micro-batch replay
     (replay-skip keyed on the full (grain, day) tuple, so a crash that
     landed one grain of a day but not the other heals on replay)."""
-    ns_cache: dict = {}
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_idempotent(
+        merge_additive(
             _rollup(batch_df),
             table_path,
             key_cols=["grain", "bucket_start", "day", "event_type"],
             sum_cols=["n_events", "sum_value"],
             part_cols=["grain", "day"],
             epoch_id=epoch_id,
-            run_ns=_resolve_ns(ns_cache, run_ns),
+            run_ns=run_ns,
         )
 
     return write_batch
@@ -353,26 +141,13 @@ def maintain_time_rollup(
     events_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain the two-grain time rollup. Readers see the
     identical relation the batch q_time_rollup computes (modulo the
     decimal value type and the partition-key day column), partitioned by
     (grain, day) so a dashboard's "today, hourly" read prunes to one
     directory."""
-    spark = events_stream.sparkSession
-    writer = (
-        events_stream.writeStream.foreachBatch(
-            merge_rollup(
-                table_path, run_ns=lambda: _query_ns(spark, checkpoint_dir)
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(events_stream, merge_rollup(table_path), checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -403,16 +178,13 @@ def _backlog_deltas(spans: DataFrame) -> DataFrame:
     )
 
 
-def merge_backlog_deltas(
-    table_path: str, run_ns: str | Callable[[], str] | None = None
-):
+def merge_backlog_deltas(table_path: str, run_ns: str | None = None):
     """foreachBatch writer: merge this batch's net deltas into the
     parquet delta table, dynamically overwriting only touched month
     partitions; idempotent under micro-batch replay."""
-    ns_cache: dict = {}
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_idempotent(
+        merge_additive(
             _backlog_deltas(batch_df),
             table_path,
             # month is functionally dependent on day; listing it as a key
@@ -421,7 +193,7 @@ def merge_backlog_deltas(
             sum_cols=["d"],
             part_cols=["month"],
             epoch_id=epoch_id,
-            run_ns=_resolve_ns(ns_cache, run_ns),
+            run_ns=run_ns,
         )
 
     return write_batch
@@ -431,26 +203,15 @@ def maintain_backlog(
     spans_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain the sweep-line delta table from a stream of
     order spans. The stored relation is (day, d, month) net deltas —
     O(calendar) rows regardless of order volume — and any reader gets
     the live backlog curve from :func:`backlog_from_deltas` without
     rescanning order history."""
-    spark = spans_stream.sparkSession
-    writer = (
-        spans_stream.writeStream.foreachBatch(
-            merge_backlog_deltas(
-                table_path, run_ns=lambda: _query_ns(spark, checkpoint_dir)
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start(
+        spans_stream, merge_backlog_deltas(table_path), checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def backlog_from_deltas(spark: SparkSession, table_path: str) -> DataFrame:

@@ -735,8 +735,10 @@ def test_bucketed_growth_committed_read_excludes_torn_epoch(spark):
 
     from streaming_data_ingestion_spark.streaming.bucket_growth import (
         bucketed_growth_writer,
-        last_committed_epoch,
         read_committed_facts,
+    )
+    from streaming_data_ingestion_spark.streaming.sink import (
+        last_committed_epoch,
     )
     from streaming_data_ingestion_spark.tables import artifact_path
 

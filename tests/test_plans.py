@@ -1148,7 +1148,7 @@ def test_no_session_conf_overwrite_mode_in_streaming_modules():
     (streaming/growth.py, round-5 incident: the first-seen index was
     wiped to _SUCCESS-only by any zero-new-user batch). House pattern is
     the per-write ``.option("partitionOverwriteMode", "dynamic")``
-    (streaming/dedup_index.py, streaming/mv.py) — ban the session-conf
+    (streaming/sink.overwrite_partitions) — ban the session-conf
     form from the streaming package outright."""
     import pathlib
 

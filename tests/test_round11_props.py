@@ -449,3 +449,46 @@ def test_corpus_count_serves_from_snapshot_stamped_catalog(
     finally:
         monkeypatch.undo()
         spark.sql("DROP TABLE IF EXISTS sdi_corpus_stats_t")
+
+
+def test_analyze_stamp_is_stale_when_a_write_lands_during_analyze(
+    spark, tmp_path, monkeypatch
+):
+    """analyze_with_snapshot stamps the mtime read BEFORE the ANALYZE.
+    A write that lands while ANALYZE runs must leave the stamp stale, so
+    row_count_for_path refuses the catalog count and the caller counts
+    inline — the stats may predate the write."""
+    from streaming_data_ingestion_spark.stats_catalog import (
+        analyze_with_snapshot,
+        row_count_for_path,
+    )
+
+    path = str(tmp_path / "embeddings.parquet")
+    spark.range(100).selectExpr("id AS vec_id").write.parquet(path)
+    spark.sql("DROP TABLE IF EXISTS sdi_stats_race_t")
+    spark.sql(
+        "CREATE TABLE sdi_stats_race_t (vec_id BIGINT) USING parquet "
+        f"LOCATION '{path}'"
+    )
+    sql = spark.sql
+
+    def sql_with_concurrent_write(query, *args, **kwargs):
+        out = sql(query, *args, **kwargs)
+        if query.startswith("ANALYZE"):
+            spark.range(7).selectExpr("id AS vec_id").write.mode(
+                "append"
+            ).parquet(path)
+        return out
+
+    try:
+        monkeypatch.setattr(spark, "sql", sql_with_concurrent_write)
+        analyze_with_snapshot(spark, "sdi_stats_race_t", path)
+        monkeypatch.undo()
+        assert row_count_for_path(spark, path) is None
+        # an ANALYZE with no concurrent write stamps the live snapshot
+        spark.sql("REFRESH TABLE sdi_stats_race_t")
+        analyze_with_snapshot(spark, "sdi_stats_race_t", path)
+        assert row_count_for_path(spark, path) == 107
+    finally:
+        monkeypatch.undo()
+        spark.sql("DROP TABLE IF EXISTS sdi_stats_race_t")

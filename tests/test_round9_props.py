@@ -213,7 +213,7 @@ def test_commit_log_total_order_properties(tmp_path_factory, ops):
     sorted by seq and stable across calls, and per-namespace
     last_committed_epoch tracks the max epoch of exactly that
     namespace."""
-    from streaming_data_ingestion_spark.streaming.ann_stream import (
+    from streaming_data_ingestion_spark.streaming.sink import (
         committed_epochs,
         last_commit_seq,
         last_committed_epoch,

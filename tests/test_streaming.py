@@ -847,6 +847,98 @@ def test_mv_marker_namespaced_by_run(spark, tmp_path):
     } == {k: 2 * v for k, v in once.items()}
 
 
+def test_maintainers_namespace_markers_by_their_own_running_query(
+    spark, tmp_path, monkeypatch
+):
+    """Two maintained streams on separate checkpoints run at the same
+    time into separate tables. Every ``last_epoch`` marker of each table
+    carries ITS OWN checkpoint's query id (the one the checkpoint's
+    ``metadata`` file records), and neither maintainer reads that file:
+    the namespace comes from the running query, not from the
+    checkpoint."""
+    import builtins
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from streaming_data_ingestion_spark.streaming.hist_stream import (
+        maintain_value_hist,
+    )
+    from streaming_data_ingestion_spark.streaming.mv import (
+        maintain_daily_counts,
+    )
+
+    ev = load(spark, SF_DIR, "events").select(
+        "event_id", "ts", "event_type", "value"
+    )
+    src = {}
+    for name, mod in (("daily", 0), ("hist", 1)):
+        src[name] = str(tmp_path / f"src_{name}")
+        ev.filter(F.col("event_id") % 2 == mod).repartition(3).write.parquet(
+            src[name]
+        )
+    ckpt = {n: str(tmp_path / f"ckpt_{n}") for n in src}
+    table = {n: str(tmp_path / f"table_{n}") for n in src}
+
+    reads: list[str] = []
+
+    def spy_open(orig):
+        def wrapped(file, *args, **kwargs):
+            reads.append(str(file))
+            return orig(file, *args, **kwargs)
+
+        return wrapped
+
+    def spy_reader(orig):
+        def wrapped(self, *paths, **kwargs):
+            for p in paths:
+                reads.extend(map(str, p if isinstance(p, list) else [p]))
+            return orig(self, *paths, **kwargs)
+
+        return wrapped
+
+    for meth in ("text", "json", "load", "parquet"):
+        monkeypatch.setattr(
+            DataFrameReader, meth, spy_reader(getattr(DataFrameReader, meth))
+        )
+    monkeypatch.setattr(builtins, "open", spy_open(builtins.open))
+
+    def stream(name):
+        return (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src[name])
+        )
+
+    queries = [
+        maintain_daily_counts(stream("daily"), table["daily"], ckpt["daily"]),
+        maintain_value_hist(
+            stream("hist"), table["hist"], ckpt["hist"], "value", 0.0, 512.0
+        ),
+    ]
+    for q in queries:
+        q.awaitTermination(120)
+    monkeypatch.undo()
+
+    assert not [p for p in reads if p.rstrip("/").endswith("metadata")], reads
+    ids = {}
+    for name in src:
+        with open(f"{ckpt[name]}/metadata") as fh:
+            ids[name] = json.loads(fh.readline())["id"]
+        markers = {
+            r["last_epoch"]
+            for r in spark.read.parquet(table[name])
+            .select("last_epoch")
+            .distinct()
+            .collect()
+        }
+        assert markers, name
+        assert {m.rpartition(":")[0] for m in markers} == {ids[name]}, (
+            name,
+            markers,
+        )
+    assert ids["daily"] != ids["hist"]
+
+
 def test_mv_rollup_multiwave_with_replay_matches_batch(spark, tmp_path):
     """Three epochs of incremental two-grain maintenance, with a replay
     injected after every epoch, must equal the from-scratch batch
@@ -908,50 +1000,6 @@ def test_mv_rollup_multiwave_with_replay_matches_batch(spark, tmp_path):
     want_full = batch_fn(spark, SF_DIR)
     assert final.count() == want_full.count()
     assert final.exceptAll(want_full).count() == 0
-
-
-def test_mv_legacy_long_marker_migrates_once(spark, tmp_path):
-    """Tables written by the pre-run_ns code stamped last_epoch as a
-    LONG; the current merge writes STRING markers. Without migration the
-    first dynamic overwrite would leave a mixed-type column across
-    partitions and the next read would fail on schema merge. The merge
-    must detect the legacy type, rewrite once, and then merge normally."""
-    import streaming_data_ingestion_spark.streaming.mv as mv
-
-    table = str(tmp_path / "daily_legacy")
-    ev = load(spark, SF_DIR, "events").select("ts", "event_type").limit(200)
-
-    # fabricate a legacy table: daily counts with a LONG last_epoch,
-    # partitioned the same way the maintainer writes it
-    legacy = mv._daily_counts(ev).withColumn("last_epoch", F.lit(0))
-    assert dict(legacy.dtypes)["last_epoch"] in ("int", "bigint")
-    legacy.write.mode("overwrite").partitionBy("day").parquet(table)
-    mv._MARKER_OK.discard(table)  # fresh probe for this path
-
-    once = {
-        (r["day"], r["event_type"]): r["n"]
-        for r in spark.read.parquet(table).collect()
-    }
-
-    # a new run's epoch 0 merges on top of the migrated table
-    wb = mv.merge_daily_counts(table, run_ns="run-new")
-    wb(ev, 0)
-
-    after = spark.read.parquet(table)
-    assert dict(after.dtypes)["last_epoch"] == "string"
-    got = {
-        (r["day"], r["event_type"]): r["n"] for r in after.collect()
-    }
-    assert got == {k: 2 * v for k, v in once.items()}
-    # replay of the same epoch after migration: still a no-op
-    wb(ev, 0)
-    again = {
-        (r["day"], r["event_type"]): r["n"]
-        for r in spark.read.parquet(table).collect()
-    }
-    assert again == got
-    # and the staging dir is cleaned up
-    assert not (tmp_path / "daily_legacy__marker_migration").exists()
 
 
 def test_streaming_cms_grid_matches_batch_sketch(spark, tmp_path):
@@ -1048,6 +1096,32 @@ def test_streaming_cms_grid_shape_is_persisted_and_enforced(spark, tmp_path):
     merge_cms_grid(table, run_ns="run-a", width=64, depth=2)(wave, 1)
     got = estimate_tokens(spark, table, probe, width=64, depth=2)
     assert got.count() == 5
+
+
+def test_cms_serving_leaves_nothing_behind_at_exit(spark):
+    """The q_cms_serving builder's grid AND its shape sidecar lie inside
+    paths that ``tables.artifact_path`` removes at exit. So once the
+    process exits, no ``spark-warehouse/*_shape`` entry (or any other
+    entry stamped with this pid) is left behind."""
+    import os
+
+    from streaming_data_ingestion_spark import tables
+    from streaming_data_ingestion_spark.queries.serving import stored_cms_path
+    from streaming_data_ingestion_spark.streaming.cms_stream import _shape_path
+
+    grid = stored_cms_path(spark, SF_DIR)
+    assert os.path.isdir(_shape_path(grid))
+    owned = [
+        p
+        for p in tables._ARTIFACT_CLEANUP
+        if _shape_path(grid).startswith(p + os.sep)
+    ]
+    assert owned, "the shape sidecar is outside every removed-at-exit path"
+    wh = os.path.dirname(owned[0])
+    mine = [e for e in os.listdir(wh) if f"_p{os.getpid()}" in e]
+    assert mine and all(
+        os.path.join(wh, e) in tables._ARTIFACT_CLEANUP for e in mine
+    ), mine
 
 
 def test_streaming_cms_full_stream_e2e(spark, tmp_path):
@@ -1678,7 +1752,7 @@ def test_first_seen_growth_epoch_replay_idempotent(spark, tmp_path):
     """Epoch replay is the growth module's exactly-once mechanism: the
     index write overwrites the replayed epoch's OWN partition and the
     daily merge skips stamped partitions. Driving the batch writer
-    directly (the mv legacy-marker pattern), a replayed epoch — both a
+    directly (as the mv replay tests do), a replayed epoch — both a
     novel-users epoch and a zero-new-users epoch, the case that used to
     truncate the index under the session-conf bug — must leave the index
     and daily tables byte-identical."""
@@ -2207,8 +2281,10 @@ def test_ann_fold_in_probe_never_sees_torn_epoch(spark, tmp_path):
     from streaming_data_ingestion_spark.streaming.ann_stream import (
         assign_to_centroids,
         fold_in_writer,
-        last_committed_epoch,
         read_committed_index,
+    )
+    from streaming_data_ingestion_spark.streaming.sink import (
+        last_committed_epoch,
     )
 
     emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
@@ -2298,13 +2374,15 @@ def test_ann_generation_rebuild_is_atomic_and_exact(spark, tmp_path):
     from streaming_data_ingestion_spark.streaming.ann_stream import (
         bootstrap_index,
         fold_in_writer,
-        last_committed_epoch,
         latest_generation,
         load_centroids,
         probe_generation,
         read_committed_index,
         rebuild_ann_index,
         resolve_index,
+    )
+    from streaming_data_ingestion_spark.streaming.sink import (
+        last_committed_epoch,
     )
 
     emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
@@ -2424,9 +2502,11 @@ def test_generation_probe_adc_stage_is_codes_only(spark, tmp_path):
     )
     from streaming_data_ingestion_spark.streaming.ann_stream import (
         bootstrap_index,
-        committed_epochs,
         load_centroids,
         resolve_index,
+    )
+    from streaming_data_ingestion_spark.streaming.sink import (
+        committed_epochs,
     )
 
     emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").filter(
@@ -2617,13 +2697,15 @@ def test_ann_compact_generation_preserves_rows_and_quantizer(spark, tmp_path):
     atomically; probes answer identically before and after."""
     from streaming_data_ingestion_spark.streaming.ann_stream import (
         bootstrap_index,
-        committed_epochs,
         compact_generation,
         fold_in_writer,
         load_centroids,
         probe_generation,
         read_committed_index,
         resolve_index,
+    )
+    from streaming_data_ingestion_spark.streaming.sink import (
+        committed_epochs,
     )
 
     emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").filter(
@@ -2663,11 +2745,13 @@ def test_ann_late_replay_keeps_commit_seq_and_rows(spark, tmp_path):
     by replays. Pinned by asserting the epoch's files are untouched."""
     from streaming_data_ingestion_spark.streaming.ann_stream import (
         bootstrap_index,
-        committed_epochs,
         fold_in_writer,
         load_centroids,
         read_committed_index,
         resolve_index,
+    )
+    from streaming_data_ingestion_spark.streaming.sink import (
+        committed_epochs,
     )
 
     emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").filter(
