@@ -20,15 +20,15 @@ comparability):
 
 * A labelled COLD first-execution reading per key ("queries_cold" /
   "tpch_cold" / "extended_cold" on the detail line; "cold_total" on the
-  compact line): each group's bounded-persist registry is cleared
-  (caching.clear_registry) and every key is timed on its FIRST
-  execution, so persisted-intermediate build costs — which the warm
-  medians deliberately exclude — are visible per key. Caveats stated so
-  the numbers are read honestly: the first keys of the first group also
-  absorb residual JVM/codegen warm-up, and when several keys share one
-  persisted intermediate (the lifecycle daily spine; the r12-documented
-  LSH signature/generation/bucketed builds, which live in other memos
-  and are NOT cleared) the first sharer's cold number carries the build.
+  compact line): before each group the artifact cache is cleared
+  (artifacts.clear) and every key is timed on its FIRST execution, so
+  the builds of persisted intermediates and stored artifacts — which
+  the warm medians deliberately exclude — are visible per key. Caveats
+  stated so the numbers are read honestly: the first keys of the first
+  group also absorb residual JVM/codegen warm-up, and when several keys
+  share one artifact (the lifecycle daily spine, a serving key's stored
+  stats and its _b2 binding) the first sharer's cold number carries
+  the build.
 * "parallelism" (sc.defaultParallelism) and "master" in both JSON lines,
   so the driver can verify $SPARK_GRAFT_CPUS is honored instead of
   inferring from timing ratios.
@@ -245,7 +245,7 @@ EXTENDED = (
     "q_media_wav_decode",    # real RIFF/PCM parse inside mapInPandas
     "q_media_image_decode",  # real BMP/PPM parse inside mapInPandas
     # banded-LSH near-dup, steady-state: the warm-up pass pays the
-    # bounded_persist signature build + the auto key's corpus count, so
+    # persisted signature build + the auto key's corpus count, so
     # the timed medians measure the production candidate/verify path
     # (same cold-cost exclusion as the generation/bucketed builds)
     "q_emb_neardup_lsh",     # fixed-width banded-LSH near-dup binding
@@ -330,16 +330,16 @@ def _time_group(
 ) -> tuple[dict[str, float], dict[str, float]]:
     """(warm medians, cold first-execution) for one query group.
 
-    Cold pass first: the bounded-persist registry is cleared, so each
-    key's FIRST execution pays its persisted-intermediate builds (keys
-    sharing one intermediate: the first sharer pays it). Then the
+    Cold pass first: the artifact cache is cleared, so each key's FIRST
+    execution pays its artifact builds (keys sharing one artifact: the
+    first sharer pays it). Then the
     original warm-up pass (now the 2nd execution — steady state exactly
     as before) and N_PASSES timed passes whose MEDIAN is the warm
     number, byte-compatible with every prior round's methodology.
     """
-    from streaming_data_ingestion_spark.caching import clear_registry
+    from streaming_data_ingestion_spark import artifacts
 
-    clear_registry()
+    artifacts.clear()
     cold: dict[str, float] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench:cold:{name}")

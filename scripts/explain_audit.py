@@ -393,7 +393,7 @@ AUDITED = (
         "Apriori-pruned market basket. Read: the frequent-item filter "
         "(n_i >= 2) sits BELOW the pair self-join, bounding the "
         "quadratic stage against hot baskets; the basket relation is an "
-        "InMemoryTableScan (bounded_persist) feeding all six consumers "
+        "InMemoryTableScan (artifacts.cached) feeding all six consumers "
         "from one distinct pass.",
     ),
     (

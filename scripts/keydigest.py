@@ -31,7 +31,7 @@ import inspect
 import json
 import os
 import re
-from types import FunctionType, ModuleType
+from types import CodeType, FunctionType, ModuleType
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIGESTS_PATH = os.path.join(HERE, "registry_digests.json")
@@ -147,13 +147,25 @@ def _local_import_targets(f, pkg_prefix: str) -> list:
     return out
 
 
+def _code_names(code: CodeType) -> set[str]:
+    """``co_names`` of ``code`` and of every code object nested in it.
+    A name used only inside a lambda, nested def or comprehension lives
+    in that inner code object's ``co_names``, not the outer one's."""
+    names = set(code.co_names)
+    for c in code.co_consts:
+        if isinstance(c, CodeType):
+            names |= _code_names(c)
+    return names
+
+
 def reachable_sources(
     fn, pkg_prefix: str = PKG_PREFIX
 ) -> dict[tuple[str, str], str]:
     """Transitive closure of package-local callables reachable from
     ``fn``: the function's own source plus every package function or
-    class it can name — via its globals, its closure cells, or
-    attribute access on a package module it holds — recursively.
+    class it can name — via its globals (also inside its nested
+    functions and lambdas), its closure cells, or attribute access on a
+    package module it holds — recursively.
     Keyed by (module, qualname); values are ``inspect.getsource`` text,
     so ANY edit inside the call graph changes some value."""
     seen: dict[tuple[str, str], str] = {}
@@ -189,7 +201,7 @@ def reachable_sources(
         except (OSError, TypeError):
             seen[key] = repr(f)
 
-        names = sorted(set(code.co_names))
+        names = sorted(_code_names(code))
         g = getattr(f, "__globals__", {})
         candidates = [g.get(n) for n in names]
         candidates.extend(_local_import_targets(f, pkg_prefix))

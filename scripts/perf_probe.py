@@ -71,7 +71,7 @@ def main() -> int:
     for name in keys:
         spec = specs[name]
         spark.sparkContext.setJobDescription(f"probe:{name}:warmup")
-        # warm-up exactly as bench.py does (pays bounded_persist builds etc.)
+        # warm-up exactly as bench.py does (pays artifact builds etc.)
         df = spec.fn(spark, sf_dir)
         if not args.no_exec:
             _noop(df)

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load
 
@@ -116,12 +117,10 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lift, part_a, part_b) is a total order so LIMIT 100 is
     deterministic.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     # the basket relation feeds SIX consumers (both pair sides, the
     # apriori filter, both support joins, the total) — uncached, each
     # would re-scan + re-distinct the fact table
-    b = bounded_persist(
+    b = artifacts.cached(
         "q_assoc_rules.baskets",
         sf_dir,
         lambda: load(spark, sf_dir, "lineitem")
@@ -129,7 +128,7 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct(),
     )
     n = b.agg(F.countDistinct("k").cast("long").alias("n_orders"))
-    item = bounded_persist(
+    item = artifacts.cached(
         "q_assoc_rules.item",
         sf_dir,
         lambda: b.groupBy("p").agg(
@@ -270,8 +269,6 @@ def q_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-order close aggregate and the order↔close equi-join — both
     map-side-combinable / hash joins on the order key.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     closes = li.groupBy(F.col("l_orderkey").alias("k")).agg(
@@ -293,7 +290,7 @@ def q_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides consume it, and without the persist each side re-ran the
     # order↔close equi-join and the union'd fact passes (~10 scans).
     # One execution of the sweep-line build, then day-sized work only.
-    deltas = bounded_persist(
+    deltas = artifacts.cached(
         "q_backlog_curve.deltas",
         sf_dir,
         lambda: (
@@ -548,8 +545,6 @@ def q_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     total re-aggregate joined back on the region key, then a
     regions-sized Σ. No data-sized shuffle beyond the first aggregate.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
@@ -583,7 +578,7 @@ def q_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final share aggregate are separate plan branches, and without
     # the persist each re-ran the fact join+aggregate — two corpus
     # passes for one rollup. Now the fact table is read exactly once.
-    srev = bounded_persist("q_hhi.srev", sf_dir, _srev)
+    srev = artifacts.cached("q_hhi.srev", sf_dir, _srev)
     rtot = srev.groupBy("region").agg(F.sum("rev").alias("tot"))
     share = F.col("rev").cast("double") / F.col("tot").cast("double")
     return (

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import DEC, sql_dec_to_double
 from streaming_data_ingestion_spark.queries.llm_pipeline import (
     _SQL_SPLIT_OF,
@@ -167,13 +168,11 @@ def q_bigram_cond_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL-summed for order independence, round(6) absorbs the libm
     ULP.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     d = spread_for_cpu(load(spark, sf_dir, "documents"))
     # Persist the vocab²-bounded bigram counts: the context re-aggregate,
     # the 1-row total, and the entropy join each re-ran the bigram
     # explode corpus pass without it (~3 tokenize passes → 1).
-    bi = bounded_persist(
+    bi = artifacts.cached(
         "q_bigram_cond_entropy.bi",
         sf_dir,
         lambda: (
@@ -341,7 +340,6 @@ def q_type_token_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bucket"),
         F.explode(_tokens()).alias("term"),
     )
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     # ONE tokenize pass: collapse the token stream to (bucket, term)
     # occurrence counts and persist that vocabulary×buckets-bounded
@@ -349,7 +347,7 @@ def q_type_token_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (min bucket per term) both re-aggregate from it. The previous
     # shape re-ran the tokenize+explode corpus pass for each consumer
     # and for both triangle-join sides (~3 tokenize passes).
-    bt = bounded_persist(
+    bt = artifacts.cached(
         "q_type_token_curve.bt",
         sf_dir,
         lambda: toks.groupBy("bucket", "term").agg(
@@ -462,14 +460,12 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources are excluded by the identical `s_n < n` guard in both
     engines — JSD vs an empty complement is undefined, not 0.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     d = spread_for_cpu(load(spark, sf_dir, "documents"))
     toks = d.select("source", F.explode(_tokens()).alias("term"))
     # Persist the sources×vocabulary counts: the global term counts,
     # per-source totals, and the sparse join each re-ran the tokenize
     # corpus pass without it (~4 tokenize passes). One pass now.
-    st = bounded_persist(
+    st = artifacts.cached(
         "q_js_divergence.st",
         sf_dir,
         lambda: toks.groupBy("source", "term").agg(

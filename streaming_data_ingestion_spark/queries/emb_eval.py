@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import DEC
 from streaming_data_ingestion_spark.queries.llm_similarity import (
     _DIM,
@@ -103,14 +104,12 @@ def q_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x−c)² is one IEEE multiply of identical doubles, DECIMAL-summed;
     argmin ties break on the smaller label in both engines.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     e = spread_for_cpu(load(spark, sf_dir, "embeddings"))
     qz = F.floor(F.col("x") * F.lit(1e10))
     # Persist the narrow (vec_id, label, dim, x) stream: the centroid
     # fit and the scoring join are separate plan branches that each
     # re-ran the posexplode corpus pass without it (2 passes → 1).
-    dims = bounded_persist(
+    dims = artifacts.cached(
         "q_centroid_classifier.dims",
         sf_dir,
         lambda: e.select(

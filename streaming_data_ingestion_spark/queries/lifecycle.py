@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import DEC, sql_dec_to_double
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load
@@ -145,13 +146,11 @@ def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     μ and the denominator are 1-row broadcasts. Per-term products are
     row-local IEEE doubles; both sums go through DECIMAL(38,10).
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     ev = load(spark, sf_dir, "events")
     # Persist the calendar-bounded daily series: μ, the denominator, and
     # both lag-join sides are separate plan branches that each re-ran
     # the fact aggregate without it (~4 corpus passes). One pass now.
-    daily = bounded_persist(
+    daily = artifacts.cached(
         "q_acf.daily",
         sf_dir,
         lambda: ev.groupBy(F.to_date("ts").alias("day")).agg(
@@ -270,13 +269,12 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("duration"),
         F.col("tp").isNotNull().alias("observed"),
     )
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     # Persist the calendar-bounded (duration, observed) counts: the
     # event-day spine, the at-risk broadcast build, and both survival
     # triangle-join sides each re-ran the user-keyed fact aggregate
     # without it (~4 corpus passes). One pass (plus the horizon scan).
-    c = bounded_persist(
+    c = artifacts.cached(
         "q_survival_km.c",
         sf_dir,
         lambda: dur.groupBy("duration", "observed").agg(
@@ -623,15 +621,13 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. DECIMAL value sums are order-independent; the single
     final division is exact.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     ev = load(spark, sf_dir, "events")
     # Persist the narrow user→cohort map and the cohorts×ages value
     # grid: sizes + the age join consume `f`, and both triangle-join
     # sides consume `av` — without the persists the user-keyed fact
     # aggregate and the fact join each ran twice (~5 corpus passes).
     # Two passes now (cohort map, then the age rollup).
-    f = bounded_persist(
+    f = artifacts.cached(
         "q_cohort_ltv.f",
         sf_dir,
         lambda: ev.groupBy("user_id").agg(
@@ -641,7 +637,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = f.groupBy("cohort").agg(
         F.count(F.lit(1)).cast("long").alias("cohort_users")
     )
-    av = bounded_persist(
+    av = artifacts.cached(
         "q_cohort_ltv.av",
         sf_dir,
         lambda: (
@@ -754,13 +750,11 @@ def q_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; products row-local, sums DECIMAL, round(6) absorbs the
     sqrt/compound ULP.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     ev = load(spark, sf_dir, "events")
     # Persist the two-series daily relation (the q_acf treatment): means,
     # denominator, and both lag-join sides otherwise each re-ran the
     # fact aggregate (~4 corpus passes). One pass now.
-    daily = bounded_persist(
+    daily = artifacts.cached(
         "q_xcorr.daily",
         sf_dir,
         lambda: ev.groupBy(F.to_date("ts").alias("day")).agg(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load
 
@@ -220,15 +221,6 @@ JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
  AND a.doc_id < b.doc_id
 """
-
-
-# Bounded persist registry for the graph queries (pagerank, triangles):
-# at most one cached intermediate alive per query key regardless of how
-# many sf_dirs the session touches — see caching.bounded_persist.
-from streaming_data_ingestion_spark.caching import (  # noqa: E402
-    _REGISTRY as _PERSIST_REGISTRY,
-    bounded_persist as _bounded_persist,
-)
 
 
 def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,19 +943,19 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         ).select("e.src", "e.dst")
 
-    # persisted via the bounded registry: the edge list feeds the node
+    # persisted through artifacts.cached: the edge list feeds the node
     # set, the degree pass, and one join per power iteration; nodes and
     # deg are themselves node-count-bounded and referenced once per
     # UNROLLED iteration (the 3-step plan re-aggregates each reference
     # independently), so they persist too — 7 bounded aggregates over
     # the edge cache collapse to 2
-    edges = _bounded_persist("q_pagerank.edges", sf_dir, _build_edges)
-    nodes = _bounded_persist(
+    edges = artifacts.cached("q_pagerank.edges", sf_dir, _build_edges)
+    nodes = artifacts.cached(
         "q_pagerank.nodes",
         sf_dir,
         lambda: edges.select(F.col("src").alias("id")).distinct(),
     )
-    deg = _bounded_persist(
+    deg = artifacts.cached(
         "q_pagerank.deg",
         sf_dir,
         lambda: edges.groupBy(F.col("src").alias("id")).agg(
@@ -1061,10 +1053,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregates map-side; clustering = 2·tri / (deg·(deg−1)) is
     exact-integer math with one IEEE division.
     """
-    # persisted via the bounded registry: the pair set feeds three
+    # persisted through artifacts.cached: the pair set feeds three
     # self-join arms + the degree pass (same lifecycle as q_pagerank's
     # edge cache — at most one entry alive regardless of sf_dirs seen)
-    p = _bounded_persist(
+    p = artifacts.cached(
         "q_graph_triangles.pairs",
         sf_dir,
         lambda: _lsh_candidate_pairs(spark, sf_dir),
@@ -1155,13 +1147,11 @@ def q_graph_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision-sized per step; unbounded recursion would instead use the
     q_dedup_clusters fixpoint loop with its active-vertex pruning.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     # Persist the collision-bounded pair set: the recursive CTE below
     # re-evaluates `edges` (and the seed) on every BFS level, and
     # without the persist each evaluation re-ran the full MinHash
     # signature + band self-join (~depth+2 corpus passes → 1).
-    pairs = bounded_persist(
+    pairs = artifacts.cached(
         "q_graph_reach.pairs",
         sf_dir,
         lambda: _lsh_candidate_pairs(spark, sf_dir),
@@ -1335,13 +1325,11 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         _winnow_postings,
     )
 
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     # Persist both candidate pair sets (collision-bounded, never n²):
     # each is consumed twice (its own count + the intersection), and
     # without the persists the full MinHash-signature band join and the
     # winnowing postings self-join each ran twice (~7 corpus scans).
-    lsh = bounded_persist(
+    lsh = artifacts.cached(
         "q_dedup_agreement.lsh",
         sf_dir,
         lambda: _lsh_candidate_pairs(spark, sf_dir),
@@ -1365,7 +1353,7 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b")
         )
 
-    win = bounded_persist("q_dedup_agreement.win", sf_dir, _win)
+    win = artifacts.cached("q_dedup_agreement.win", sf_dir, _win)
     n_lsh = lsh.agg(F.count(F.lit(1)).cast("long").alias("n_lsh"))
     n_win = win.agg(F.count(F.lit(1)).cast("long").alias("n_winnow"))
     n_both = lsh.join(win, ["doc_a", "doc_b"]).agg(
@@ -1520,7 +1508,7 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision-scoped, never all-pairs. Thresholds are python-precomputed
     literals, so the only measured quantities are exact BIGINT counts.
     """
-    sigs = _bounded_persist(
+    sigs = artifacts.cached(
         "q_lsh_tuning.sigs", sf_dir, lambda: _minhash_sigs(spark, sf_dir)
     )
     outs = []

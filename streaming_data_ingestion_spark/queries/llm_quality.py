@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load, spread_for_cpu
 from streaming_data_ingestion_spark.queries.llm_text import (
@@ -355,14 +356,12 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     one decimal-summed mean of −ln p(term) — round(6) absorbs the
     cross-engine libm ln() ULP, everything else is exact.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(_tokens()).alias("term"))
     # Persist the vocab-sized term counts (the q_source_log_odds /
     # q_lm_score_bigram treatment): the 1-row total and the probability
     # broadcast otherwise each re-ran the tokenize corpus pass.
-    tc = bounded_persist(
+    tc = artifacts.cached(
         "q_lm_score.tc",
         sf_dir,
         lambda: tok.groupBy("term").agg(F.count(F.lit(1)).alias("c")),
@@ -515,7 +514,6 @@ def q_lm_score_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     single IEEE divisions of exact integers, −ln ULP absorbed by the
     same round(6) decimal-mean recipe as q_lm_score.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
     d = load(spark, sf_dir, "documents")
     toked = d.select("doc_id", _tokens().alias("t")).where(F.size("t") >= 2)
     big = toked.select(
@@ -542,7 +540,7 @@ def q_lm_score_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("c1"))
         )
 
-    c1 = bounded_persist("q_lm_score_bigram.c1", sf_dir, _c1)
+    c1 = artifacts.cached("q_lm_score_bigram.c1", sf_dir, _c1)
     v = c1.agg(F.count(F.lit(1)).cast("bigint").alias("v"))
     nll = -F.log(
         (F.col("c12") + 1).cast("double") / (F.col("c1") + F.col("v"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import davg, dsum, sql_davg, sql_dsum
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load, spread_for_cpu
@@ -952,11 +953,9 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     total plus the floor filter — unpersisted, each reference would
     re-explode the corpus.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     d = spread_for_cpu(load(spark, sf_dir, "documents").select("doc_id", "text"))
     toked = d.select(_tokens().alias("t"))
-    uni = bounded_persist(
+    uni = artifacts.cached(
         "q_pmi.uni",
         sf_dir,
         lambda: (
@@ -966,7 +965,7 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     t1 = uni.agg(F.sum("c1").alias("n1"))
-    bi_all = bounded_persist(
+    bi_all = artifacts.cached(
         "q_pmi.bi",
         sf_dir,
         lambda: (
@@ -1157,8 +1156,6 @@ def q_source_log_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-exploding the corpus once each — without it the physical plan
     contained FOUR full token-stream Generates.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     def _st() -> DataFrame:
         d = load(spark, sf_dir, "documents")
         tok = d.select("source", F.explode(_tokens()).alias("term"))
@@ -1166,7 +1163,7 @@ def q_source_log_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("y_sw")
         )
 
-    st = bounded_persist("q_source_log_odds.st", sf_dir, _st)
+    st = artifacts.cached("q_source_log_odds.st", sf_dir, _st)
     ns = st.groupBy("source").agg(F.sum("y_sw").cast("bigint").alias("n_s"))
     tw = st.groupBy("term").agg(F.sum("y_sw").cast("bigint").alias("y_w"))
     tot = tw.agg(F.sum("y_w").cast("bigint").alias("n"))

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.queries.llm_text import (
     _SQL_TOKENS,
     _tokens,
@@ -178,7 +179,7 @@ def _hex_budget_parts(
     d: DataFrame,
     budget: int,
     levels: int = _BUDGET_LEVELS,
-    cache_tag: str = "",
+    cache_dir: str = "",
 ):
     """Decompose the budget walk over ``d`` (cols: doc_id, source, h,
     n_toks) into wholesale-taken parts plus ONE final boundary sub-cell.
@@ -197,16 +198,15 @@ def _hex_budget_parts(
     ≤ 16^-levels of the corpus, whose rows still need the per-row
     running sum seeded with its exact composed offset ``before``.
 
-    ``cache_tag`` (non-empty ⇒ persist): each level's tagged relation
+    ``cache_dir`` (the fixture dir; non-empty ⇒ persist, keyed on its
+    snapshot through ``artifacts.cached``): each level's tagged relation
     feeds two consumers (the wholesale-part filter and the recursion
     base the next level chains from); without a persist every union
     branch re-runs all prior levels' spine-join chains. The cached
     relation is the same narrow proxy rows plus two spine columns and
-    shrinks 16× per level. Empty tag (the test-harness default) keeps
+    shrinks 16× per level. Empty (the test-harness default) keeps
     the walk fully lazy, so synthetic relations never alias a cache.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     parts: list[DataFrame] = []
     cur = d.withColumn("before", F.lit(0).cast("long"))
     for lvl in range(1, levels + 1):
@@ -242,11 +242,12 @@ def _hex_budget_parts(
         # (decide-with-small-rows: ~50 B/row) plus two spine columns, and
         # shrinks 16× per level.
         tagged = cur.drop("before").join(F.broadcast(offs), "b")
-        if cache_tag:
-            tagged = bounded_persist(
+        if cache_dir:
+            tagged = artifacts.cached(
                 f"q_token_budget_pick.tagged{lvl}",
-                f"{cache_tag}|{budget}",
+                cache_dir,
                 lambda t=tagged: t,
+                params=(budget,),
             )
         parts.append(
             tagged.where(F.col("off") + F.col("t") <= budget).select(
@@ -309,8 +310,6 @@ def q_token_budget_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     The selected set is identical to the oracle's flat running sum
     because hex-prefix order is a prefix of the full (h, doc_id) order.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     # Materialize the NARROW proxy (doc_id, source, h, n_toks — no text)
     # exactly once: the recursion's parts/spine/boundary subtrees are
     # separate plan branches, and without the persist each one re-ran
@@ -318,7 +317,7 @@ def q_token_budget_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus passes; measured 2.1s → 0.9s at sf0.1). This is the
     # decide-with-small-rows split: one pass computes the few bytes the
     # budget walk needs, every later pass touches only those bytes.
-    d = bounded_persist(
+    d = artifacts.cached(
         "q_token_budget_pick.d",
         sf_dir,
         lambda: load(spark, sf_dir, "documents").select(
@@ -328,7 +327,7 @@ def q_token_budget_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(_tokens()).cast("long").alias("n_toks"),
         ),
     )
-    parts, boundary = _hex_budget_parts(d, _BUDGET, cache_tag=sf_dir)
+    parts, boundary = _hex_budget_parts(d, _BUDGET, cache_dir=sf_dir)
     # the final boundary sub-cell: per-row running sum over ≤ 16^-k of
     # the corpus, partitioned by its full hex prefix
     w = (

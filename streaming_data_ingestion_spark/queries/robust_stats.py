@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import DEC, sql_dec_to_double
 from streaming_data_ingestion_spark.ranking import with_global_rank
 from streaming_data_ingestion_spark.registry import query
@@ -426,14 +427,12 @@ def q_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (evaluated only where both lags exist, so both models score the
     same days and the comparison is fair).
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     ev = load(spark, sf_dir, "events")
     # Persist the calendar-bounded daily series: it is consumed three
     # times (anchor + two lag join build sides) and the scored union
     # re-executes the join subtree, so without the persist the fact
     # aggregate ran ~6x. One corpus pass, then day-sized work only.
-    daily = bounded_persist(
+    daily = artifacts.cached(
         "q_forecast_eval.daily",
         sf_dir,
         lambda: (
@@ -663,14 +662,12 @@ def q_type_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dense grid, moments, and the day-keyed pair join are all
     calendar×|types|-bounded.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     ev = load(spark, sf_dir, "events")
     # Persist the calendar×types series: days/types spines, the dense
     # grid's left join, the moments pass, and both pair-join sides all
     # re-derived it (~9 fact scans without the persist). One corpus
     # pass; every later stage is calendar×|types|-bounded.
-    daily = bounded_persist(
+    daily = artifacts.cached(
         "q_type_corr_matrix.daily",
         sf_dir,
         lambda: ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
@@ -692,7 +689,7 @@ def q_type_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches (moments, both pair-join sides); persisting it stops each
     # branch re-running the spine distincts + left join over the daily
     # cache (~9 bounded aggregates → 3 cache scans).
-    grid = bounded_persist("q_type_corr_matrix.grid", sf_dir, _grid)
+    grid = artifacts.cached("q_type_corr_matrix.grid", sf_dir, _grid)
     m = grid.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("nd"),
         F.sum("n").cast("long").alias("s"),

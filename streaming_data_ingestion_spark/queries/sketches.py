@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load, spread_for_cpu
 
@@ -187,7 +188,6 @@ def heavy_hitters_cms(
     shape is validated against the error law before any plan is built,
     so a caller cannot run a vacuous sketch."""
     check_cms_params(width, depth, phi_denom)
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     def _tokb() -> DataFrame:
         # the depth bucket ids (salted md5s) are computed ONCE per
@@ -210,12 +210,12 @@ def heavy_hitters_cms(
             ],
         )
 
-    # the registry key carries the grid shape: the two registered
-    # bindings are two OPERATORS with two grids, and sharing one key
+    # the cache kind carries the grid shape: the two registered
+    # bindings are two OPERATORS with two grids, and sharing one kind
     # made each bench pass evict and rebuild the other binding's token
-    # table (r13; the "at most one live entry per key" bound is per
+    # table (r13; the "at most one live entry per kind" bound is per
     # operator, not per module)
-    tokb = bounded_persist(
+    tokb = artifacts.cached(
         f"q_heavy_hitters_cms.tokb.w{width}d{depth}",
         sf_dir,
         _tokb,
@@ -521,8 +521,6 @@ def q_quantile_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoped histogram — grid-bounded at any data scale, same family as
     q_ks_test's ECDF join.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     ev = load(spark, sf_dir, "events")
     # Persist the two small shared intermediates: every downstream
     # consumer (per-type rollup, global rollup, totals, triangle-join
@@ -532,12 +530,12 @@ def q_quantile_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole point is that partials merge WITHOUT rescanning the data.
     # Now the fact table is read exactly twice (bounds, then partials);
     # both cached frames are bounded (1 row; ≤ types·days·512 rows).
-    bounds = bounded_persist(
+    bounds = artifacts.cached(
         "q_quantile_rollup_merge.bounds",
         sf_dir,
         lambda: ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi")),
     )
-    fine = bounded_persist(
+    fine = artifacts.cached(
         "q_quantile_rollup_merge.fine",
         sf_dir,
         lambda: (
@@ -579,7 +577,7 @@ def q_quantile_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (totals, the triangle-join build side, the triangle probe side);
     # persisting it stops each branch re-running both rollup aggregates
     # over the fine cache (6 aggregations → 2).
-    scoped = bounded_persist("q_quantile_rollup_merge.scoped", sf_dir, _scoped)
+    scoped = artifacts.cached("q_quantile_rollup_merge.scoped", sf_dir, _scoped)
     tot = scoped.groupBy("scope").agg(F.sum("c").cast("long").alias("n"))
     b = scoped.select(F.col("scope").alias("bscope"), F.col("bin").alias("bbin"), "c")
     cum = (

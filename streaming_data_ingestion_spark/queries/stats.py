@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import DEC, sql_dec_to_double
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load, spread_for_cpu
@@ -394,14 +395,12 @@ def q_emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     but that sacrifices the bit-exact cross-engine sum; this is the
     exactness-first formulation.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     emb = spread_for_cpu(load(spark, sf_dir, "embeddings"))
     # Persist the quantized (vec_id, i, q) stream: both self-join sides
     # and the two per-dim mean builds are separate plan branches that
     # each re-ran the posexplode+quantize corpus pass (~4 passes). One
     # pass now; the frame is narrow (id, int, decimal18) by design.
-    vals = bounded_persist(
+    vals = artifacts.cached(
         "q_emb_covariance.vals",
         sf_dir,
         lambda: emb.select(

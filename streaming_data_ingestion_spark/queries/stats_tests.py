@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import DEC, dlit_array, sql_dec_to_double
 from streaming_data_ingestion_spark.ranking import with_global_rank
 from streaming_data_ingestion_spark.registry import query
@@ -243,14 +244,13 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.when(F.col("event_type") == "click", 1).otherwise(0).alias("g1"),
     )
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     bounds = vals.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     # Persist the ≤512-row binned histogram: the ECDF triangle join's
     # two sides and the totals aggregate are separate plan branches
     # that each re-ran the bounds + binning corpus passes without it
     # (~6 fact scans). Two passes now (bounds, then binning).
-    binned = bounded_persist(
+    binned = artifacts.cached(
         "q_ks_test.binned",
         sf_dir,
         lambda: (
@@ -462,13 +462,11 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine libm ln() ULP — the q_entropy absorber. NMI is computed
     FROM the rounded values, so it is bit-deterministic by construction.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     docs = load(spark, sf_dir, "documents")
     # Persist the langs×sources contingency table: marginals, totals,
     # and the MI join each re-derived it — ~8 corpus scans for one
     # contingency aggregate without the persist. One pass now.
-    cells = bounded_persist(
+    cells = artifacts.cached(
         "q_mutual_information.cells",
         sf_dir,
         lambda: docs.groupBy("lang", "source").agg(
@@ -791,12 +789,11 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count(F.lit(1)) - F.sum("early")).cast("long").alias("c_late"),
         )
     )
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     # Persist the ≤bins-row histogram (the q_ks_test treatment): the
     # totals and the PSI sum are separate branches that each re-ran the
     # bounds + binning corpus passes without it.
-    binned = bounded_persist("q_psi_drift.binned", sf_dir, lambda: binned)
+    binned = artifacts.cached("q_psi_drift.binned", sf_dir, lambda: binned)
     tot = binned.agg(
         F.sum("c_early").cast("long").alias("n_early"),
         F.sum("c_late").cast("long").alias("n_late"),
@@ -1059,7 +1056,6 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.lit(6)
     for k in range(len(_POIS) - 1, -1, -1):
         w = F.when(u < F.lit(float(_POIS[k])), F.lit(k)).otherwise(w)
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     draws = ev.select(
         "event_id", "value", F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("b")
@@ -1072,7 +1068,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of re-running the 64x fan-out aggregate. Three corpus
     # passes (fan-out x2 + mean) collapse to ONE; decimal sums are
     # order-independent, so every emitted value is bit-unchanged.
-    rep = bounded_persist(
+    rep = artifacts.cached(
         "q_bootstrap_ci.rep",
         sf_dir,
         lambda: draws.groupBy("b").agg(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import dsum, sql_dsum
 from streaming_data_ingestion_spark.registry import query
 from streaming_data_ingestion_spark.tables import load
@@ -293,7 +294,6 @@ def q_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local. Batch relation is |events|/1000; every stage parallel.
     """
     from pyspark.sql import Window
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     ev = load(spark, sf_dir, "events")
     e = ev.select(
@@ -327,7 +327,7 @@ def q_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("_pid", F.spark_partition_id())
         )
 
-    ranged = bounded_persist("q_late_events.ranged", sf_dir, _ranged)
+    ranged = artifacts.cached("q_late_events.ranged", sf_dir, _ranged)
     stats = ranged.groupBy("_pid").agg(F.max("batch_max").alias("pmax")).collect()
     run = None
     recs = []

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import (
     DEC,
     davg,
@@ -439,12 +440,11 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     s = load(spark, sf_dir, "supplier")
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     # Persist the supplier-count-sized revenue view: the 1-row max and
     # the equality filter are separate plan branches that each re-ran
     # the quarter-pruned fact aggregate without it (2 corpus passes → 1).
-    rev = bounded_persist(
+    rev = artifacts.cached(
         "q_tpch_q15.rev",
         sf_dir,
         lambda: l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_data_ingestion_spark import artifacts
 from streaming_data_ingestion_spark.compat import (
     DEC,
     sql_davg,
@@ -480,13 +481,12 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey")
     )
-    from streaming_data_ingestion_spark.caching import bounded_persist
 
     l = load(spark, sf_dir, "lineitem")
     # Persist the part-count-sized value rollup: the 1-row total and the
     # threshold filter are separate plan branches that each re-ran the
     # fact join+aggregate without it (2 corpus passes → 1).
-    scoped = bounded_persist(
+    scoped = artifacts.cached(
         "q_tpch_q11.scoped",
         sf_dir,
         lambda: (
@@ -719,8 +719,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one IEEE division, same both engines) and the final SUM is decimal
     with one trailing /7.0.
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     p = load(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#3") & (F.col("p_size") <= 12)
     )
@@ -729,7 +727,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     # selective): the per-part AVG and the threshold pass are separate
     # plan branches that each re-ran the scan+broadcast join without it
     # (2 corpus passes → 1).
-    sliced = bounded_persist(
+    sliced = artifacts.cached(
         "q_tpch_q17.sliced",
         sf_dir,
         lambda: l.join(

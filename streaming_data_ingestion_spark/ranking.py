@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from streaming_data_ingestion_spark import artifacts
+
 _PID = "__rank_pid"
 _MID = "__rank_mid"
 
@@ -54,9 +56,10 @@ def with_global_rank(
     Returns ``(df_with_rank, total_row_count)``; the count rides along
     for free from the offset pass (NTILE-style consumers need it).
 
-    ``cache=(key, tag)`` routes the ranged intermediate through the
-    bounded persist registry (one live entry per key); without it the
-    intermediate is plain-persisted and lives until the session drops it.
+    ``cache=(kind, sf_dir)`` routes the ranged intermediate through
+    ``artifacts.cached`` (one live entry per kind, keyed on the snapshot
+    of ``sf_dir``); without it the intermediate is plain-persisted and
+    lives until the session drops it.
 
     ``group_col`` (must be ``order_cols[0]``): additionally returns a
     small offsets DataFrame ``(group_col, __grp_base, __grp_n)`` —
@@ -69,8 +72,6 @@ def with_global_rank(
     already collects — one job instead of two, values identical by
     construction (base = the global position of the group's first row).
     """
-    from streaming_data_ingestion_spark.caching import bounded_persist
-
     spark = df.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if group_col is not None and (
@@ -93,7 +94,7 @@ def with_global_rank(
     # physical layout (it is deterministic either way with a unique key,
     # but persisting avoids paying the range shuffle twice)
     if cache is not None:
-        tagged = bounded_persist(cache[0], cache[1], _build)
+        tagged = artifacts.cached(cache[0], cache[1], _build)
     else:
         tagged = _build().persist()
     grp_keys = [_PID] + ([group_col] if group_col is not None else [])

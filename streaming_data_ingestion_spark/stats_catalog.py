@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 # data file the statistics were collected on. A consumer that requires
 # snapshot-exact counts (the LSH width policy) trusts catalog stats only
 # when this stamp matches the file's CURRENT mtime — the same snapshot
-# key tables.load and the width policy's memo use — so a stale ANALYZE
+# stamp tables.load and artifacts.snapshot use — so a stale ANALYZE
 # can never serve a count that diverges from a live COUNT(*).
 STATS_MTIME_PROP = "sdi.stats.mtime_ns"
 
@@ -72,7 +72,7 @@ def row_count_for_path(spark: SparkSession, path: str) -> int | None:
     (VERDICT r11 item 6 / r12 item 8): a streaming-grown corpus whose
     maintainer runs analyze_with_snapshot after each commit keeps the
     width fresh with NO inline COUNT(*) job. The lookup scans the
-    current database's tables on a memo miss only."""
+    current database's tables on a cache miss only."""
     import os
 
     try:

@@ -111,36 +111,37 @@ def test_collated_grouping_matches_lower(spark):
 
 def test_graph_persist_registry_bounded(spark):
     """q_pagerank / q_graph_triangles persist an intermediate per call;
-    the bounded registry must hold at most ONE cache entry per query key:
+    the artifact cache must hold at most ONE entry per kind:
     same sf_dir → reuse, different sf_dir → the stale entry is
     unpersisted before the new one is built."""
+    from streaming_data_ingestion_spark import artifacts
     from streaming_data_ingestion_spark.queries import llm_dedup
 
     sf_a = "/root/testdata/sf0.001"
-    key = "q_graph_triangles.pairs"
+    kind = "q_graph_triangles.pairs"
 
     llm_dedup.q_graph_triangles(spark, sf_a).count()
-    sf_seen, cached_a = llm_dedup._PERSIST_REGISTRY[key]
-    assert sf_seen == sf_a
+    key_a, cached_a = artifacts._LIVE[kind]
+    assert key_a[3] == artifacts.snapshot(sf_a)
     assert cached_a.storageLevel.useMemory
 
     # same sf_dir: the identical object is reused, still cached
     llm_dedup.q_graph_triangles(spark, sf_a).count()
-    assert llm_dedup._PERSIST_REGISTRY[key][1] is cached_a
+    assert artifacts._LIVE[kind][1] is cached_a
     assert cached_a.storageLevel.useMemory
 
-    # different sf_dir: stale entry is unpersisted, registry swaps
+    # different sf_dir: stale entry is unpersisted, the cache swaps
     sf_b = "/root/testdata/sf0.01"
     llm_dedup.q_graph_triangles(spark, sf_b).count()
-    sf_seen_b, cached_b = llm_dedup._PERSIST_REGISTRY[key]
-    assert sf_seen_b == sf_b and cached_b is not cached_a
+    key_b, cached_b = artifacts._LIVE[kind]
+    assert key_b[3] == artifacts.snapshot(sf_b) and cached_b is not cached_a
     assert not cached_a.storageLevel.useMemory  # released
     assert cached_b.storageLevel.useMemory
 
-    # back to sf_a keeps the registry at one entry for the key
+    # back to sf_a keeps the cache at one entry for the kind
     llm_dedup.q_graph_triangles(spark, sf_a).count()
     assert not cached_b.storageLevel.useMemory
-    assert len([k for k in llm_dedup._PERSIST_REGISTRY if k == key]) == 1
+    assert len([k for k in artifacts._LIVE if k == kind]) == 1
 
 
 def test_grouped_agg_udaf_matches_builtin(spark):

@@ -137,6 +137,40 @@ def test_digest_reaches_function_local_imports():
         assert helper in quals, f"{helper} not reached: {sorted(quals)}"
 
 
+def _only_in_lambda():
+    return 1
+
+
+def _only_in_nested_def():
+    return 2
+
+
+def _outer_with_nested_code():
+    def inner():
+        return _only_in_nested_def()
+
+    return (lambda: _only_in_lambda())() + inner()
+
+
+def test_digest_follows_names_inside_nested_code():
+    """A helper named only inside a lambda or a nested def lives in the
+    inner code object's co_names, never the outer function's; the digest
+    must still reach it. Every ``artifacts.cached(kind, sf_dir, lambda:
+    helper(...))`` call site is this shape — q_graph_triangles names its
+    candidate-pair helper only inside its cache build lambda."""
+    from streaming_data_ingestion_spark.registry import all_queries
+
+    quals = {
+        q
+        for _, q in reachable_sources(
+            _outer_with_nested_code, pkg_prefix=__name__
+        )
+    }
+    assert {"_only_in_lambda", "_only_in_nested_def"} <= quals, quals
+    fn = inspect.unwrap(all_queries()["q_graph_triangles"].fn)
+    assert "_lsh_candidate_pairs" in {q for _, q in reachable_sources(fn)}
+
+
 def test_digest_is_sensitive_to_oracle_and_fn(live):
     """key_digest must move when the oracle SQL moves (same fn)."""
     from streaming_data_ingestion_spark.registry import all_queries

@@ -652,8 +652,8 @@ _SWEEP_SKIP = {
 # SortMergeJoin over the stored buckets — is exactly what the sweeps
 # exist to inspect. The price is that the first plan build in a fresh
 # process writes both bucketed fixtures eagerly (~2 s at sf0.001, once
-# per process via _BUCKET_MEMO in queries/layout_q.py; all three sweeps
-# in one pytest session share that single build).
+# per fixture snapshot via artifacts.stored in queries/layout_q.py; all
+# three sweeps in one pytest session share that single build).
 
 
 def test_no_accidental_cartesian_anywhere(spark):
@@ -732,17 +732,17 @@ def test_cms_candidate_pass(spark):
 
 def test_cms_bindings_keep_separate_persist_entries(spark):
     """r13: the two registered CMS grids persist their token tables
-    under SHAPE-QUALIFIED registry keys. When they shared one key, every
+    under SHAPE-QUALIFIED cache kinds. When they shared one kind, every
     alternating execution (each bench pass) evicted and rebuilt the
     other binding's corpus-sized intermediate — the warm 'steady state'
     silently included a full tokenize+hash pass per execution."""
-    from streaming_data_ingestion_spark.caching import _REGISTRY
+    from streaming_data_ingestion_spark.artifacts import _LIVE
     from streaming_data_ingestion_spark.registry import all_queries
 
     qs = all_queries()
     qs["q_heavy_hitters_cms"].fn(spark, SF_DIR)
     qs["q_heavy_hitters_cms_b2"].fn(spark, SF_DIR)
-    keys = [k for k in _REGISTRY if k.startswith("q_heavy_hitters_cms.tokb")]
+    keys = [k for k in _LIVE if k.startswith("q_heavy_hitters_cms.tokb")]
     assert len(keys) == 2, keys
 
 

@@ -334,23 +334,20 @@ def test_streaming_cms_nondefault_shape(spark, tmp_path):
 
 
 def test_corpus_count_memoized(spark):
-    """The width policy's 1-scalar count is paid once per (process,
-    corpus snapshot) — repeated builds must hit the memo, and the memo
+    """The width policy's 1-scalar count is paid once per (application,
+    corpus snapshot) — repeated builds must hit the cache, and the cache
     must be keyed by file snapshot (path + mtime), not bare directory."""
-    import os
+    from streaming_data_ingestion_spark import artifacts
 
-    from streaming_data_ingestion_spark.queries import llm_similarity as m
-
-    path = os.path.abspath(f"{SF_TINY}/embeddings.parquet")
-    key = (path, os.stat(path).st_mtime_ns)
     n1 = _corpus_count(spark, SF_TINY)
-    assert m._NDL_COUNT_MEMO[key] == n1
-    # poison the memo: a second call must NOT recount
-    m._NDL_COUNT_MEMO[key] = n1 + 7
+    key, n = artifacts._LIVE["ndl_corpus_count"]
+    assert n == n1 and key[3] == artifacts.snapshot(SF_TINY)
+    # poison the cache: a second call must NOT recount
+    artifacts._LIVE["ndl_corpus_count"] = (key, n1 + 7)
     try:
         assert _corpus_count(spark, SF_TINY) == n1 + 7
     finally:
-        m._NDL_COUNT_MEMO[key] = n1
+        artifacts._LIVE["ndl_corpus_count"] = (key, n1)
 
 
 def test_corpus_count_tracks_fixture_rebuild(spark, tmp_path):
