@@ -1,41 +1,53 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""The one timing loop of this repo, and the sf0.1 benchmark built on it.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {"q_agg_group": sec, ...}, "sf": 0.1}
+``measure(spark, sf_dir, names)`` times registered keys with fixed steps:
 
-Each query is forced end-to-end with a noop sink (full computation, no
-driver-side collect). A warm-up pass primes the JVM/codegen so numbers
-reflect steady-state engine throughput, not JVM startup; each query is
-then timed N_PASSES times and the MEDIAN is reported — single-run
-wall-clock on a shared machine drifts ±20% (round-2's +19.5% "regression"
-reproduced as pure environmental noise: re-runs of identical code gave
-27.5-29.6s vs the recorded 37.4s), and the median absorbs that without
-hiding real slowdowns.
+1. ``artifacts.clear()``, then a COLD pass: each key's first execution,
+   so it pays its artifact builds (keys sharing one artifact: the first
+   sharer pays it; the first keys of a process also absorb residual
+   JVM/codegen warm-up).
+2. One warm-up pass (JVM, codegen and rebuilt intermediates are hot
+   after it).
+3. ``N_PASSES`` timed passes; the warm number is their MEDIAN. Single
+   runs on a shared machine drift +-20% (round 2's +19.5% "regression"
+   was pure noise), and the median absorbs that without hiding real
+   slowdowns.
 
-Round 13 (VERDICT r12 items 1+2, measurement additions only — the warm
-medians in "queries" keep the exact prior methodology for longitudinal
-comparability):
+A timed span is the builder call plus a ``noop`` write: full
+computation, no driver-side collect. The builder sits inside the span
+because iterative operators (connected components) run their
+driver-coordinated rounds eagerly in it. A key whose cold run exceeds
+``COLD_ONLY_S`` gets no warm passes (the one reading, usually a blowup
+at a larger scale, is already made) and its record says so.
 
-* A labelled COLD first-execution reading per key ("queries_cold" /
-  "tpch_cold" / "extended_cold" on the detail line; "cold_total" on the
-  compact line): before each group the artifact cache is cleared
-  (artifacts.clear) and every key is timed on its FIRST execution, so
-  the builds of persisted intermediates and stored artifacts — which
-  the warm medians deliberately exclude — are visible per key. Caveats
-  stated so the numbers are read honestly: the first keys of the first
-  group also absorb residual JVM/codegen warm-up, and when several keys
-  share one artifact (the lifecycle daily spine, a serving key's stored
-  stats and its _b2 binding) the first sharer's cold number carries
-  the build.
-* "parallelism" (sc.defaultParallelism) and "master" in both JSON lines,
-  so the driver can verify $SPARK_GRAFT_CPUS is honored instead of
-  inferring from timing ratios.
+Each execution runs under its own job group. After a timed span ends,
+never inside it, the loop reads the group's totals from Spark's status
+store (``perfbench.layers.group_totals``) and, once per key, the
+exchange and Python-node counts of the executed plan's tree string, so
+every key gets one record: cold_s, warm_s, build_s, plan_s, jobs,
+stages, tasks, executor run/CPU/GC seconds, shuffle read/write, spill,
+exchanges and python. Layers are those of the pass whose time is the
+warm median.
+
+Usage:
+  python bench.py                      # the three groups; two driver lines
+  python bench.py --keys headline      # one group: tpch, extended, rest too
+  python bench.py --keys K1,K2 --plans DIR   # + DIR/<key>.txt plans
+
+Every run merges its records into docs/PROFILE_r{N}.json. ``--keys
+rest`` (every key in no group) also writes the sweep artifact
+docs/BENCH_SWEEP_r{N}.json from the cold map. With no ``--keys`` the
+output is two JSON lines (see ``emit_lines``); the compact last line
+carries the headline warm medians, every group total and the cold
+totals, plus ``parallelism`` and ``master`` so the driver can verify
+$SPARK_GRAFT_CPUS is honored.
 """
 
 from __future__ import annotations
 
+import argparse
+import itertools
 import json
 import os
 import re
@@ -44,12 +56,26 @@ import sys
 import time
 
 N_PASSES = 3
+COLD_ONLY_S = 60.0
+SWEEP_SLOW_S = 2.0  # sweep keys whose cold run exceeds this are "slow"
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.append(os.path.join(HERE, "scripts"))
 
-from streaming_data_ingestion_spark.registry import all_queries
-from streaming_data_ingestion_spark.session import get_spark
-from streaming_data_ingestion_spark.tables import TABLES, load
+from keydigest import current_round  # noqa: E402
+
+from perfbench.layers import (  # noqa: E402
+    PYTHON_NODES,
+    count_exchanges,
+    drain_listener_bus,
+    group_totals,
+    plan_nodes,
+)
+from streaming_data_ingestion_spark import artifacts  # noqa: E402
+from streaming_data_ingestion_spark.registry import all_queries  # noqa: E402
+from streaming_data_ingestion_spark.session import get_spark  # noqa: E402
+from streaming_data_ingestion_spark.tables import TABLES, load  # noqa: E402
 
 # Headline set: one representative per operator family, weighted toward
 # shapes that stress scan/shuffle/join/window/LLM paths.
@@ -269,10 +295,13 @@ def emit_lines(
     """Output lines, full detail FIRST and a compact line LAST: the
     driver records only the final ~2000 chars of output and parses the
     last line — r4's single long line lost its leading keys (headline
-    total included) to that window, so the parseable record leads with
-    the totals and carries only the headline per-query map, truncated
-    to the top-20 slowest if even that overflows. tests/test_bench.py
-    pins the contract so a print reorder can't regress it."""
+    total included) to that window, and r13's detail line kept only the
+    tail of ``extended_cold``. So the parseable record leads with the
+    totals (each group's cold total included) and carries only the
+    headline per-query map, truncated to the top-20 slowest if even
+    that overflows; per-key data lives in docs/PROFILE_r{N}.json.
+    tests/test_bench.py pins the contract so a print reorder can't
+    regress it."""
     total = round(sum(timings.values()), 3)
     detail_d = {
         "metric": "headline_query_total_runtime_detail",
@@ -305,8 +334,13 @@ def emit_lines(
         "n_extended": len(ext_timings),
         "queries": timings,
     }
-    if cold is not None:
-        compact["cold_total"] = round(sum(cold.values()), 3)
+    for field, cold_map in (
+        ("cold_total", cold),
+        ("tpch_cold_total", tpch_cold),
+        ("extended_cold_total", ext_cold),
+    ):
+        if cold_map is not None:
+            compact[field] = round(sum(cold_map.values()), 3)
     if parallelism is not None:
         compact["parallelism"] = parallelism
     if master is not None:
@@ -325,81 +359,236 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _time_group(
-    spark, specs, sf_dir: str, names: tuple[str, ...]
-) -> tuple[dict[str, float], dict[str, float]]:
-    """(warm medians, cold first-execution) for one query group.
+_GROUP_SEQ = itertools.count()
 
-    Cold pass first: the artifact cache is cleared, so each key's FIRST
-    execution pays its artifact builds (keys sharing one artifact: the
-    first sharer pays it). Then the
-    original warm-up pass (now the 2nd execution — steady state exactly
-    as before) and N_PASSES timed passes whose MEDIAN is the warm
-    number, byte-compatible with every prior round's methodology.
-    """
-    from streaming_data_ingestion_spark import artifacts
+
+def _execute(spark, fn, sf_dir: str, name: str):
+    """One execution of builder ``fn`` under a fresh job group:
+    (group, span seconds, builder seconds, the built frame)."""
+    sc = spark.sparkContext
+    group = f"bench-{next(_GROUP_SEQ)}:{name}"
+    sc.setJobGroup(group, f"bench:{name}")
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        _noop(df)
+        t2 = time.perf_counter()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return group, t2 - t0, t1 - t0, df
+
+
+def _layers(sc, group: str) -> dict:
+    """Status-store totals of every job that ran under ``group``."""
+    drain_listener_bus(sc)
+    t = group_totals(sc, group)
+    return {
+        "jobs": t.jobs,
+        "stages": t.stages,
+        "tasks": t.tasks,
+        "run_s": round(t.run_ms / 1000, 3),
+        "cpu_s": round(t.cpu_ns / 1e9, 3),
+        "gc_s": round(t.gc_ms / 1000, 3),
+        "shuffle_read_bytes": t.shuffle_read_bytes,
+        "shuffle_write_bytes": t.shuffle_write_bytes,
+        "spill_bytes": t.spill_bytes,
+    }
+
+
+def _plan(df, name: str, plans: str | None) -> dict:
+    """Planner time and node counts of a built frame. Counts come from
+    the executed plan's TREE string: the formatted explain lists each
+    node twice (tree and details), which doubled every count read off
+    it."""
+    t0 = time.perf_counter()
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    plan_s = time.perf_counter() - t0
+    if plans:
+        os.makedirs(plans, exist_ok=True)
+        with open(os.path.join(plans, f"{name}.txt"), "w") as fh:
+            fh.write(df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            ))
+    return {
+        "plan_s": round(plan_s, 3),
+        "exchanges": count_exchanges(tree),
+        "python": sum(n in PYTHON_NODES for n in plan_nodes(tree)),
+    }
+
+
+def measure(
+    spark, sf_dir: str, names, plans: str | None = None
+) -> dict[str, dict]:
+    """One record per key of ``names`` (see the module docstring). A key
+    whose builder or write raises gets ``{"error": ...}`` and sits out
+    the remaining passes."""
+    sc = spark.sparkContext
+    specs = all_queries()
+    # parquet-footer/listing caches are paid before any timed span: cold
+    # numbers measure the ENGINE's first execution
+    for t in TABLES:
+        load(spark, sf_dir, t).limit(1).count()
+    errors: dict[str, dict] = {}
+
+    def run(name: str, read_layers: bool = True):
+        if name in errors:
+            return None
+        try:
+            group, span_s, build_s, df = _execute(
+                spark, specs[name].fn, sf_dir, name
+            )
+        except Exception as e:  # noqa: BLE001 (recorded, not hidden)
+            errors[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
+            return None
+        # read now: the status store keeps only the latest 1000 jobs
+        return span_s, build_s, df, _layers(sc, group) if read_layers else None
 
     artifacts.clear()
-    cold: dict[str, float] = {}
-    for name in names:
-        spark.sparkContext.setJobDescription(f"bench:cold:{name}")
-        t0 = time.perf_counter()
-        _noop(specs[name].fn(spark, sf_dir))
-        cold[name] = round(time.perf_counter() - t0, 3)
-    # Warm-up pass: JVM/codegen/plan caches and (rebuilt) persisted
-    # intermediates are all hot after this, as in every prior round.
-    for name in names:
-        spark.sparkContext.setJobDescription(f"bench:warmup:{name}")
-        _noop(specs[name].fn(spark, sf_dir))
-    samples: dict[str, list[float]] = {name: [] for name in names}
-    for _ in range(N_PASSES):
-        for name in names:
-            # The builder call is INSIDE the timed span: it is lazy (and
-            # ~free) for declarative queries, but iterative operators
-            # (connected components) run their driver-coordinated rounds
-            # eagerly in the builder, and excluding that would
-            # under-report them.
-            spark.sparkContext.setJobDescription(f"bench:{name}")
-            t0 = time.perf_counter()
-            _noop(specs[name].fn(spark, sf_dir))
-            samples[name].append(time.perf_counter() - t0)
-    warm = {
-        name: round(statistics.median(ts), 3) for name, ts in samples.items()
+    cold = {name: run(name) for name in names}
+    runs = {
+        name: [c] if c[0] > COLD_ONLY_S else []
+        for name, c in cold.items() if c is not None
     }
-    return warm, cold
+    warm = [name for name, r in runs.items() if not r]
+    for name in warm:
+        run(name, read_layers=False)
+    for _ in range(N_PASSES):
+        for name in warm:
+            done = run(name)
+            if done is not None:
+                runs[name].append(done)
+
+    records: dict[str, dict] = {}
+    for name in names:
+        if name in errors:
+            records[name] = errors[name]
+            continue
+        spans = [r[0] for r in runs[name]]
+        # layers and plan of the pass whose time is the warm median
+        _, build_s, df, layers = sorted(runs[name], key=lambda r: r[0])[
+            len(spans) // 2
+        ]
+        records[name] = {
+            "cold_s": round(cold[name][0], 3),
+            "warm_s": round(statistics.median(spans), 3),
+            "cold_only": name not in warm,
+            "build_s": round(build_s, 3),
+            **_plan(df, name, plans),
+            **layers,
+        }
+    return records
 
 
-def main() -> int:
+def write_profile(records: dict[str, dict], sf: float, sc) -> str:
+    """Merge ``records`` into docs/PROFILE_r{N}.json, one key a line, so
+    a targeted ``--keys`` rerun fills gaps instead of erasing the record.
+    A profile of another scale or core count is replaced, not mixed."""
+    dest = os.path.join(HERE, "docs", f"PROFILE_r{current_round()}.json")
+    head = {
+        "metric": "bench_profile",
+        "sf": sf,
+        "parallelism": sc.defaultParallelism,
+        "master": sc.master,
+        "n_passes": N_PASSES,
+        "cold_only_s": COLD_ONLY_S,
+    }
+    keys = {}
+    if os.path.exists(dest):
+        prior = json.load(open(dest))
+        if all(prior.get(k) == head[k] for k in ("sf", "parallelism")):
+            keys = prior["keys"]
+    keys.update(records)
+    body = ",\n".join(f"{json.dumps(k)}: {json.dumps(v)}" for k, v in keys.items())
+    with open(dest, "w") as fh:
+        fh.write(json.dumps(head)[:-1] + ', "keys": {\n' + body + "\n}}\n")
+    return dest
+
+
+def write_sweep(cold: dict[str, float], sf: float) -> str:
+    """docs/BENCH_SWEEP_r{N}.json from a cold map — the once-per-round
+    hot-spot smoke over keys in no group (tests/test_bench.py pins the
+    format). Pin any ``slow`` entry in docs/BENCH_NOTES.md, or fix it."""
+    ranked = dict(sorted(cold.items(), key=lambda kv: -kv[1]))
+    payload = {
+        "metric": "bench_sweep",
+        "n": len(cold),
+        "sf": sf,
+        "total": round(sum(cold.values()), 3),
+        "threshold": SWEEP_SLOW_S,
+        "slow": {n: s for n, s in ranked.items() if s > SWEEP_SLOW_S},
+        "queries": ranked,
+    }
+    print(json.dumps(payload))
+    dest = os.path.join(HERE, "docs", f"BENCH_SWEEP_r{current_round()}.json")
+    with open(dest, "w") as fh:
+        json.dump(payload, fh)
+        fh.write("\n")
+    return dest
+
+
+def select(keys: str, specs) -> list[str]:
+    """Key names from a comma list of keys and group names."""
+    groups = {"headline": HEADLINE, "tpch": TPCH, "extended": EXTENDED}
+    grouped = {n for g in groups.values() for n in g}
+    groups["rest"] = tuple(sorted(n for n in specs if n not in grouped))
+    names = [n for part in keys.split(",") if part for n in groups.get(part, (part,))]
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        raise SystemExit(f"unknown keys: {unknown}")
+    return names
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument(
+        "--keys", default="",
+        help="comma list of keys and groups (headline, tpch, extended, "
+        "rest); default: the three groups and the driver lines",
+    )
+    ap.add_argument(
+        "--plans", default=None, metavar="DIR",
+        help="write each key's formatted physical plan to DIR/<key>.txt",
+    )
+    args = ap.parse_args(argv)
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-
     spark = get_spark(app_name="sdi-bench")
+    sc = spark.sparkContext
 
-    # Touch every table so parquet-footer/listing caches are paid before
-    # any timed span (cold numbers measure the ENGINE's first execution,
-    # not filesystem metadata warm-up).
-    for t in TABLES:
-        load(spark, sf_dir, t).limit(1).count()
-    specs = all_queries()
+    if args.keys:
+        groups = [select(args.keys, all_queries())]
+    else:
+        groups = [HEADLINE, TPCH, EXTENDED]
+    records: dict[str, dict] = {}
+    for names in groups:
+        records.update(measure(spark, sf_dir, names, args.plans))
+    print(f"wrote {write_profile(records, sf, sc)}", file=sys.stderr)
+    errors = {n: r["error"] for n, r in records.items() if "error" in r}
 
-    timings, cold = _time_group(spark, specs, sf_dir, HEADLINE)
-    tpch_timings, tpch_cold = _time_group(spark, specs, sf_dir, TPCH)
-    ext_timings, ext_cold = _time_group(spark, specs, sf_dir, EXTENDED)
-
-    for line in emit_lines(
-        timings,
-        tpch_timings,
-        ext_timings,
-        sf,
-        cold=cold,
-        tpch_cold=tpch_cold,
-        ext_cold=ext_cold,
-        parallelism=spark.sparkContext.defaultParallelism,
-        master=spark.sparkContext.master,
-    ):
-        print(line)
+    if args.keys:
+        for name, rec in records.items():
+            print(json.dumps({"key": name, **rec}))
+        if args.keys == "rest":
+            cold = {n: r["cold_s"] for n, r in records.items() if n not in errors}
+            print(f"wrote {write_sweep(cold, sf)}", file=sys.stderr)
+    elif not errors:
+        warm, cold = (
+            [{n: records[n][field] for n in names} for names in groups]
+            for field in ("warm_s", "cold_s")
+        )
+        for line in emit_lines(
+            *warm, sf, *cold,
+            parallelism=sc.defaultParallelism, master=sc.master,
+        ):
+            print(line)
     spark.stop()
+    if errors:
+        print(f"failed keys: {json.dumps(errors)}", file=sys.stderr)
+        return 1
     return 0
 
 

@@ -311,7 +311,10 @@ def last_green_rounds() -> dict[str, int]:
 
 
 def current_round() -> int:
-    """Round number of the build in progress, from PROGRESS.jsonl."""
+    """Round number of the build in progress: the highest round in
+    PROGRESS.jsonl when that file exists, else one past the newest
+    CORRECTNESS_r*.json (the round whose correctness is not recorded
+    yet)."""
     rno = 0
     try:
         with open(os.path.join(HERE, "PROGRESS.jsonl")) as fh:
@@ -319,6 +322,13 @@ def current_round() -> int:
                 line = line.strip()
                 if line:
                     rno = max(rno, int(json.loads(line).get("round", 0)))
-    except (OSError, json.JSONDecodeError, ValueError):
+        return rno
+    except FileNotFoundError:
         pass
-    return rno
+    except (OSError, json.JSONDecodeError, ValueError):
+        return rno
+    rounds = [
+        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
+        for p in glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json"))
+    ]
+    return max(rounds, default=0) + 1

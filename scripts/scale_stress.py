@@ -1,69 +1,54 @@
 #!/usr/bin/env python
-"""Measure heavy-tail keys across a decade of scale (verdict r9 #2).
+"""Measure heavy-tail keys across a decade of scale.
 
-Times each selected key at sf0.1 (driver fixtures) and sf1 (the 10×
-set from make_scale_fixtures.py) in ONE Spark session — warm-up pass
-then median of N timed passes per (key, sf), same discipline as
-bench.py — and reports the growth ratio. A key scaling linearly should
-ride ~10× on 10× data; the written artifact flags anything past
---ratio-limit (default 12×, giving headroom for fixed per-query
-overheads to wash out).
+Runs bench.measure (the one timing loop: cold pass, warm-up, median of
+N timed passes, per-key status-store layers) once at the low side of
+the decade and once at the high side, in ONE Spark session, and reports
+each key's growth ratio of warm medians. A key scaling linearly should
+ride ~factor x on factor x data; the artifact flags any ratio past
+1.2 x factor (headroom for fixed per-query overheads to wash out).
 
-Usage: python scripts/scale_stress.py [--keys k1,k2|auto] [--top 15]
-                                      [--passes 3] [--ratio-limit 12]
-Writes docs/BENCH_SWEEP_sf1.json. Run EXCLUSIVELY (no concurrent Spark).
+Usage: python scripts/scale_stress.py [--keys k1,k2|auto] [--decade sf0.1:sf1]
+Writes docs/BENCH_SWEEP_<hi>.json. Run EXCLUSIVELY (no concurrent Spark).
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
-import statistics
+import re
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+TOP = 15  # keys picked by --keys auto
 
-def slowest_keys(top: int) -> list[str]:
-    """Top-N slowest keys across the latest bench detail + sweep
-    artifacts — the heavy tail the verdict asks to stress."""
-    import glob
-    import re
 
-    times: dict[str, float] = {}
-    benches = sorted(
-        glob.glob(os.path.join(HERE, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", p).group(1)),
+def _sf(name: str) -> float:
+    return float(re.search(r"sf([0-9.]+)", name).group(1))
+
+
+def slowest_keys(top: int = TOP, docs: str = os.path.join(HERE, "docs")) -> list[str]:
+    """The ``top`` keys with the largest warm medians in the newest
+    ``docs/PROFILE_r*.json`` — the heavy tail to stress."""
+    profiles = sorted(
+        glob.glob(os.path.join(docs, "PROFILE_r*.json")),
+        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
     )
-    if benches:
-        data = json.load(open(benches[-1]))
-        for grp in ("queries", "tpch", "extended"):
-            times.update(data.get(grp) or {})
-    sweeps = sorted(glob.glob(os.path.join(HERE, "docs", "BENCH_SWEEP_r*.json")))
-    if sweeps:
-        times.update(json.load(open(sweeps[-1])).get("queries") or {})
-    ranked = sorted(times.items(), key=lambda kv: -kv[1])
-    return [k for k, _ in ranked[:top]]
+    if not profiles:
+        return []
+    recs = json.load(open(profiles[-1]))["keys"]
+    timed = [k for k, r in recs.items() if "warm_s" in r]
+    return sorted(timed, key=lambda k: -recs[k]["warm_s"])[:top]
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--keys", default="auto")
-    ap.add_argument("--top", type=int, default=15)
-    ap.add_argument("--passes", type=int, default=3)
-    ap.add_argument("--ratio-limit", type=float, default=12.0)
-    ap.add_argument("--factor", type=float, default=10.0)
-    ap.add_argument(
-        "--slow-cutoff", type=float, default=60.0,
-        help="if the warm-up pass exceeds this many seconds, record that "
-        "single measured pass instead of running the timed medians — the "
-        "measurement (a blowup) is already made; repeating it 3 more "
-        "times adds wall-clock, not information",
-    )
     ap.add_argument(
         "--decade", default="sf0.1:sf1",
         help="LO:HI pair to compare. Names resolve to /root/testdata "
@@ -73,31 +58,28 @@ def main() -> int:
     )
     args = ap.parse_args()
 
+    import bench
     import make_scale_fixtures
 
-    from streaming_data_ingestion_spark.registry import all_queries
     from streaming_data_ingestion_spark.session import get_spark
-    from streaming_data_ingestion_spark.tables import TABLES, load
 
-    lo_name, hi_name = args.decade.split(":")
-    if lo_name == "sf0.1":
+    lo, hi = args.decade.split(":")
+    if lo == "sf0.1":
         sf01_dir = "/root/testdata/sf0.1"
         sf1_dir = make_scale_fixtures.build()
     else:
-        sf01_dir = make_scale_fixtures.build(dest_name=lo_name)
-        sf1_dir = make_scale_fixtures.build(
-            f".scale/{lo_name}", dest_name=hi_name
-        )
-    lo_label, hi_label = lo_name, hi_name
+        sf01_dir = make_scale_fixtures.build(dest_name=lo)
+        sf1_dir = make_scale_fixtures.build(f".scale/{lo}", dest_name=hi)
+    factor = round(_sf(hi) / _sf(lo), 6)
+    ratio_limit = round(1.2 * factor, 6)
 
-    specs = all_queries()
     if args.keys == "auto":
         from streaming_data_ingestion_spark.scale_contract import (
             decade_sweep_skips,
         )
 
         skips = set(decade_sweep_skips())
-        ranked = [k for k in slowest_keys(args.top) if k in specs]
+        ranked = slowest_keys()
         keys = [k for k in ranked if k not in skips]
         dropped = [k for k in ranked if k in skips]
         if dropped:
@@ -111,47 +93,33 @@ def main() -> int:
     else:
         keys = args.keys.split(",")
 
-    # 10× data + ~50 back-to-back heavy passes in one session needs more
+    # 10x data + ~50 back-to-back heavy passes in one session needs more
     # than Spark's 1g default local heap (the first full run OOMed the
     # shared driver/executor JVM on key #12)
     spark = get_spark(
         app_name="sdi-scale-stress",
         extra_conf={"spark.driver.memory": "6g"},
     )
-    for sf_dir in (sf01_dir, sf1_dir):
-        for t in TABLES:
-            load(spark, sf_dir, t).limit(1).count()
-
-    def run_once(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+    sides = {lo: bench.measure(spark, sf01_dir, keys), hi: bench.measure(spark, sf1_dir, keys)}
 
     results: dict[str, dict] = {}
     for name in keys:
-        row: dict[str, float] = {}
-        for label, sf_dir in ((lo_label, sf01_dir), (hi_label, sf1_dir)):
-            try:
-                warm = run_once(name, sf_dir)  # warm-up (compile, builds)
-                if warm > args.slow_cutoff:
-                    row[label] = round(warm, 3)
-                    row[f"{label}_note"] = "single pass (over slow-cutoff)"
-                    continue
-                samples = [
-                    run_once(name, sf_dir) for _ in range(args.passes)
-                ]
-                row[label] = round(statistics.median(samples), 3)
-            except Exception as e:  # noqa: BLE001
+        row: dict = {}
+        for label, recs in sides.items():
+            rec = recs[name]
+            if "error" in rec:
                 row[label] = -1.0
-                row[f"{label}_error"] = f"{type(e).__name__}: {e}"[:200]
-        if row.get(lo_label, 0) > 0 and row.get(hi_label, 0) > 0:
-            row["ratio"] = round(row[hi_label] / row[lo_label], 2)
+                row[f"{label}_error"] = rec["error"]
+                continue
+            row[label] = rec["warm_s"]
+            if rec["cold_only"]:
+                row[f"{label}_note"] = f"cold pass only (over {bench.COLD_ONLY_S:g} s)"
+        if row[lo] > 0 and row[hi] > 0:
+            row["ratio"] = round(row[hi] / row[lo], 2)
         results[name] = row
         print(f"{name}: {row}", flush=True)
 
-    dest = os.path.join(HERE, "docs", f"BENCH_SWEEP_{hi_label}.json")
+    dest = os.path.join(HERE, "docs", f"BENCH_SWEEP_{hi}.json")
     # merge into an existing artifact so a targeted --keys rerun (e.g.
     # after a session crash) fills gaps instead of erasing the record
     merged = dict(results)
@@ -164,13 +132,13 @@ def main() -> int:
     over = {
         k: v["ratio"]
         for k, v in merged.items()
-        if v.get("ratio", 0) > args.ratio_limit
+        if v.get("ratio", 0) > ratio_limit
     }
     payload = {
         "metric": "scale_stress",
-        "factor": args.factor,
-        "ratio_limit": args.ratio_limit,
-        "passes": args.passes,
+        "factor": factor,
+        "ratio_limit": ratio_limit,
+        "passes": bench.N_PASSES,
         "over_limit": over,
         "queries": merged,
     }

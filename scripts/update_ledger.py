@@ -7,7 +7,8 @@ CORRECTNESS artifacts alone cannot tell (a key absent from every
 artifact could have been registered any round). The ledger records, for
 every registry key, the round in which it first appeared:
 
-    current round = 1 + max round among CORRECTNESS_r*.json artifacts
+    current round = keydigest.current_round() (PROGRESS.jsonl, else
+                    1 + max round among CORRECTNESS_r*.json artifacts)
 
 Run this after registering new queries (tests/test_rotation.py fails
 if the ledger falls behind the registry). Existing stamps are never
@@ -16,26 +17,18 @@ mutated; removed keys are pruned.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from keydigest import current_round  # noqa: E402
 from streaming_data_ingestion_spark.registry import all_queries  # noqa: E402
 
 LEDGER = os.path.join(HERE, "registry_ledger.json")
-
-
-def current_round() -> int:
-    rounds = [
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json"))
-    ]
-    return (max(rounds) + 1) if rounds else 1
 
 
 def main() -> None:

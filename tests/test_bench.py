@@ -71,8 +71,10 @@ def test_detail_line_precedes_compact():
 def test_cold_and_parallelism_fields_are_emitted():
     """Round-13 measurement additions (VERDICT r12 items 1+2): per-key
     cold first-execution maps on the detail line, cold_total +
-    parallelism + master on the compact line — and the compact line must
-    still fit the driver's tail window with them."""
+    parallelism + master on the compact line, plus each group's cold
+    total there (the driver keeps only the tail of the detail line) —
+    and the compact line must still fit the driver's tail window with
+    them."""
     q, t, x = _fake(30, "q"), _fake(22, "t"), _fake(150, "x")
     cq = {k: round(v * 2, 3) for k, v in q.items()}
     ct = {k: round(v * 2, 3) for k, v in t.items()}
@@ -89,6 +91,8 @@ def test_cold_and_parallelism_fields_are_emitted():
     assert detail["master"] == "local[32]"
     compact = json.loads(lines[-1])
     assert compact["cold_total"] == round(sum(cq.values()), 3)
+    assert compact["tpch_cold_total"] == round(sum(ct.values()), 3)
+    assert compact["extended_cold_total"] == round(sum(cx.values()), 3)
     assert compact["parallelism"] == 32
     assert compact["master"] == "local[32]"
     # warm medians stay byte-identical to the no-cold call (longitudinal
@@ -101,7 +105,7 @@ def test_cold_and_parallelism_fields_are_emitted():
 
 def test_bench_sweep_artifact_format_is_pinned():
     """Every per-round sweep artifact (docs/BENCH_SWEEP_r{N}.json,
-    written by scripts/bench_sweep.py) must carry the fields the
+    written by ``bench.py --keys rest``) must carry the fields the
     longitudinal diffs rely on, with internally consistent counts —
     a format drift would silently break round-over-round comparison."""
     import glob
@@ -110,7 +114,7 @@ def test_bench_sweep_artifact_format_is_pinned():
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     artifacts = sorted(glob.glob(os.path.join(here, "docs", "BENCH_SWEEP_r*.json")))
-    assert artifacts, "no sweep artifact recorded — run scripts/bench_sweep.py"
+    assert artifacts, "no sweep artifact recorded — run bench.py --keys rest"
     for path in artifacts:
         d = json.load(open(path))
         for field in ("metric", "n", "sf", "total", "threshold", "slow", "queries"):
@@ -120,3 +124,62 @@ def test_bench_sweep_artifact_format_is_pinned():
         assert set(d["slow"]) <= set(d["queries"]), path
         assert all(v > d["threshold"] for v in d["slow"].values()), path
         assert abs(sum(d["queries"].values()) - d["total"]) < 0.01, path
+
+
+_RECORD_FIELDS = {
+    "cold_s", "warm_s", "cold_only", "build_s", "plan_s", "jobs", "stages",
+    "tasks", "run_s", "cpu_s", "gc_s", "shuffle_read_bytes",
+    "shuffle_write_bytes", "spill_bytes", "exchanges", "python",
+}
+
+
+def test_measure_records_every_layer_and_clears_artifacts_first(spark, monkeypatch):
+    """The one timing loop at sf0.001 over a plain key and a key that
+    reads a stored artifact: a full record per key, the status-store
+    counts filled in, and exactly one artifacts.clear() that precedes
+    every execution (so the cold pass pays the builds)."""
+    from tests.conftest import SF_DIR
+
+    events: list[str] = []
+    clear, noop = bench.artifacts.clear, bench._noop
+
+    def spy_clear():
+        events.append("clear")
+        clear()
+
+    def spy_noop(df):
+        events.append("run")
+        noop(df)
+
+    monkeypatch.setattr(bench.artifacts, "clear", spy_clear)
+    monkeypatch.setattr(bench, "_noop", spy_noop)
+    names = ("q_agg_group", "q_hist_serving")
+    recs = bench.measure(spark, SF_DIR, names)
+    assert list(recs) == list(names)
+    for rec in recs.values():
+        assert set(rec) == _RECORD_FIELDS
+        assert rec["jobs"] >= 1 and rec["tasks"] >= 1
+        assert rec["cold_only"] is False
+    assert events[0] == "clear" and events.count("clear") == 1
+    assert events.count("run") == len(names) * (2 + bench.N_PASSES)
+    # counted on the tree string: partial agg -> hash exchange -> final
+    # agg -> range exchange (the formatted explain lists each twice)
+    assert recs["q_agg_group"]["exchanges"] == 2
+
+
+def test_scale_stress_auto_pick_ranks_grouped_keys_from_the_profile(tmp_path):
+    import sys
+
+    sys.path.insert(0, str(REPO / "scripts"))
+    import scale_stress
+
+    recs = {
+        "q_dedup_clusters": {"warm_s": 9.0},
+        "q_rest_fast": {"warm_s": 0.5},
+        "q_failed": {"error": "boom"},
+        "q_sim_ivf": {"warm_s": 3.0},
+    }
+    (tmp_path / "PROFILE_r9.json").write_text(json.dumps({"keys": {"q_old": {"warm_s": 99.0}}}))
+    (tmp_path / "PROFILE_r10.json").write_text(json.dumps({"keys": recs}))
+    assert "q_dedup_clusters" in bench.HEADLINE
+    assert scale_stress.slowest_keys(2, docs=str(tmp_path)) == ["q_dedup_clusters", "q_sim_ivf"]

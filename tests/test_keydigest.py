@@ -226,3 +226,18 @@ def test_same_round_edit_cannot_dodge_reverify():
     assert effective_change_round(10, 10) == 11  # same-round green: bumped
     # defensive: a green somehow AHEAD of the build round still bumps past it
     assert effective_change_round(10, 12) == 13
+
+
+def test_current_round_falls_back_to_the_next_correctness_round(tmp_path, monkeypatch):
+    """Without PROGRESS.jsonl the round in progress is one past the
+    newest CORRECTNESS_r*.json (it read 0 here, so a sweep would have
+    written BENCH_SWEEP_r0.json); with it, PROGRESS.jsonl wins."""
+    import keydigest
+
+    monkeypatch.setattr(keydigest, "HERE", str(tmp_path))
+    assert keydigest.current_round() == 1
+    for rno in (3, 11):
+        (tmp_path / f"CORRECTNESS_r{rno:02d}.json").write_text("{}")
+    assert keydigest.current_round() == 12
+    (tmp_path / "PROGRESS.jsonl").write_text('{"round": 20}\n{"round": 19}\n')
+    assert keydigest.current_round() == 20
