@@ -243,6 +243,14 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LSH pair set persisted once per snapshot under one kind, so
+    every key that reads it several times shares one artifact entry."""
+    return artifacts.cached(
+        "lsh.pairs", sf_dir, lambda: _lsh_candidate_pairs(spark, sf_dir)
+    )
+
+
 @query(
     "q_dedup_minhash_pairs",
     oracle=_SQL_PAIRS,
@@ -465,11 +473,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log diameter) rounds, not O(diameter). Each round is two hash
     joins + one aggregate on the (small) edge/label sets — never a
     driver-side graph. Labels are monotonically non-increasing, so the
-    fixpoint test is one cheap SUM comparison per round — and that SUM is
-    the round's ONLY action: the new label set is a lazy localCheckpoint
-    materialized inside the same job, so each round costs one Spark job
-    (not three) and lineage stays O(1) deep. This is
-    the same alternating-contraction family as large-star/small-star
+    fixpoint test is one count of lowered labels per round. Each label
+    set is a ``localCheckpoint(eager=False)``, which keeps lineage O(1)
+    deep but is not free: AQE runs the checkpoint's shuffle stages at
+    the call, so a round costs several jobs. At sf0.01 the key converges
+    in one round and runs 13 jobs (docs/BENCH_NOTES.md, round 15). This
+    is the same alternating-contraction family as large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond"),
     which is the production choice when the pair graph itself is
     petabyte-scale. Oracle: DuckDB WITH RECURSIVE reachability.
@@ -519,8 +528,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # i.e. the EXACT fixpoint. The final round therefore skips the
         # label(label) self-join entirely (the earlier shape ran
         # relax+jump+sum every round and needed one extra full round to
-        # observe an unchanged checksum). One action per round, as
-        # before: the lazy localCheckpoint materializes inside this job.
+        # observe an unchanged checksum).
         n_changed = relaxed.filter(F.col("label") < F.col("_old")).count()
         if n_changed == 0:
             break
@@ -1053,14 +1061,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregates map-side; clustering = 2·tri / (deg·(deg−1)) is
     exact-integer math with one IEEE division.
     """
-    # persisted through artifacts.cached: the pair set feeds three
-    # self-join arms + the degree pass (same lifecycle as q_pagerank's
-    # edge cache — at most one entry alive regardless of sf_dirs seen)
-    p = artifacts.cached(
-        "q_graph_triangles.pairs",
-        sf_dir,
-        lambda: _lsh_candidate_pairs(spark, sf_dir),
-    )
+    # cached: the pair set feeds three self-join arms + the degree pass
+    p = _lsh_pairs_cached(spark, sf_dir)
     e1, e2, e3 = p.alias("e1"), p.alias("e2"), p.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.doc_b") == F.col("e2.doc_a"))
@@ -1151,11 +1153,7 @@ def q_graph_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluates `edges` (and the seed) on every BFS level, and
     # without the persist each evaluation re-ran the full MinHash
     # signature + band self-join (~depth+2 corpus passes → 1).
-    pairs = artifacts.cached(
-        "q_graph_reach.pairs",
-        sf_dir,
-        lambda: _lsh_candidate_pairs(spark, sf_dir),
-    )
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     pairs.createOrReplaceTempView("__reach_pairs")
     return spark.sql(f"""
 WITH RECURSIVE edges AS (
@@ -1329,11 +1327,7 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each is consumed twice (its own count + the intersection), and
     # without the persists the full MinHash-signature band join and the
     # winnowing postings self-join each ran twice (~7 corpus scans).
-    lsh = artifacts.cached(
-        "q_dedup_agreement.lsh",
-        sf_dir,
-        lambda: _lsh_candidate_pairs(spark, sf_dir),
-    )
+    lsh = _lsh_pairs_cached(spark, sf_dir)
 
     def _win() -> DataFrame:
         post = _winnow_postings(spark, sf_dir)

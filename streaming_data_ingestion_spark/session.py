@@ -14,6 +14,11 @@ one that falls over: AQE coalesces the post-shuffle partitions to match the
 actual data volume, skew-join splitting bounds the largest task, and the
 shuffle width is configured per-deployment rather than hard-coded to the
 reference's 4 (/root/reference/spark-streaming.py:118).
+
+AQE coalesces persisted plans too: by default a cached plan keeps every
+shuffle partition, so a few hundred cached rows (the LSH pair set, a sink
+epoch's delta) ran 32-task stages and wrote one file per partition
+(docs/BENCH_NOTES.md, round 15). Large ones keep advisory-size partitions.
 """
 
 from __future__ import annotations
@@ -54,6 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for pandas UDFs / toPandas — the only acceptable Python boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic cross-engine timestamps (DuckDB is UTC-naive).

@@ -200,3 +200,31 @@ def test_clear_forgets_every_kind(spark):
     again = artifacts.cached("clear_probe", SF_DIR, build)
     assert again is not df and again.storageLevel.useMemory
     artifacts.clear()
+
+
+def test_small_persisted_aggregate_is_read_by_one_task(spark):
+    """session.get_spark lets AQE size persisted plans from their runtime
+    bytes: seven cached aggregate rows sit in one partition, so a job
+    over them runs one task, not one per shuffle partition."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    agg.persist()
+    try:
+        agg.count()  # materialize the cache
+        sc.setJobGroup("cached_width_probe", "cached width probe")
+        try:
+            assert len(agg.collect()) == 7
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup("cached_width_probe")
+        tasks = sum(  # tasks that ran; a skipped map stage runs none
+            tracker.getStageInfo(s).numCompletedTasks
+            for j in jobs
+            for s in tracker.getJobInfo(j).stageIds
+        )
+        assert len(jobs) == 1 and tasks == 1
+    finally:
+        agg.unpersist()

@@ -118,7 +118,7 @@ def test_graph_persist_registry_bounded(spark):
     from streaming_data_ingestion_spark.queries import llm_dedup
 
     sf_a = "/root/testdata/sf0.001"
-    kind = "q_graph_triangles.pairs"
+    kind = "lsh.pairs"
 
     llm_dedup.q_graph_triangles(spark, sf_a).count()
     key_a, cached_a = artifacts._LIVE[kind]

@@ -778,6 +778,30 @@ def test_mv_merge_idempotent_under_epoch_replay(spark, tmp_path):
     assert doubled == {k: 2 * v for k, v in once.items()}
 
 
+def test_merge_additive_writes_one_file_per_touched_partition(spark, tmp_path):
+    """A small aggregated delta is persisted inside merge_additive, and
+    AQE coalesces the persisted plan (session.get_spark), so each epoch
+    writes one parquet file into every touched partition instead of one
+    per shuffle partition that the next epoch must read back."""
+    from pathlib import Path
+
+    from streaming_data_ingestion_spark.streaming.sink import merge_additive
+
+    table = str(tmp_path / "daily")
+    ev = load(spark, SF_DIR, "events").select("ts", "event_type")
+    delta = ev.groupBy(
+        F.to_date("ts").alias("day"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"))
+    for epoch in (0, 1):
+        merge_additive(
+            delta, table, ["day", "event_type"], ["n"], ["day"], epoch,
+            run_ns="width",
+        )
+        parts = list(Path(table).glob("day=*"))
+        assert parts
+        assert {len(list(p.glob("part-*.parquet"))) for p in parts} == {1}
+
+
 def test_mv_rollup_replay_heals_partially_landed_epoch(spark, tmp_path):
     """The replay-skip set is keyed on the FULL (grain, day) partition
     tuple: if a crash landed the grain=1h partitions of an epoch but not
