@@ -31,6 +31,7 @@ import inspect
 import json
 import os
 import re
+import subprocess
 from types import CodeType, FunctionType, ModuleType
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -310,11 +311,31 @@ def last_green_rounds() -> dict[str, int]:
     return out
 
 
+def _round_of(path: str) -> int:
+    return int(re.search(r"_r(\d+)\.json$", path).group(1))
+
+
+def _committed_profile_rounds() -> list[int]:
+    """Rounds of the docs/PROFILE_r*.json files committed at HEAD (none
+    outside a git checkout). An untracked profile is the round in
+    progress, so it does not count."""
+    try:
+        out = subprocess.run(
+            ["git", "ls-tree", "--name-only", "HEAD", "docs/"],
+            cwd=HERE, capture_output=True, text=True, check=True,
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):
+        return []
+    profiles = re.findall(r"^docs/PROFILE_r\d+\.json$", out, re.M)
+    return [_round_of(p) for p in profiles]
+
+
 def current_round() -> int:
-    """Round number of the build in progress: the highest round in
-    PROGRESS.jsonl when that file exists, else one past the newest
-    CORRECTNESS_r*.json (the round whose correctness is not recorded
-    yet)."""
+    """Round number of the build in progress: the largest of the highest
+    round in PROGRESS.jsonl, one past the newest CORRECTNESS_r*.json (the
+    round whose correctness is not recorded yet) and one past the newest
+    docs/PROFILE_r*.json committed at HEAD, so bench.py never merges into
+    or overwrites a committed round's profile or sweep."""
     rno = 0
     try:
         with open(os.path.join(HERE, "PROGRESS.jsonl")) as fh:
@@ -322,13 +343,9 @@ def current_round() -> int:
                 line = line.strip()
                 if line:
                     rno = max(rno, int(json.loads(line).get("round", 0)))
-        return rno
     except FileNotFoundError:
         pass
     except (OSError, json.JSONDecodeError, ValueError):
         return rno
-    rounds = [
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json"))
-    ]
-    return max(rounds, default=0) + 1
+    done = [_round_of(p) for p in glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json"))]
+    return max(rno, max(done + _committed_profile_rounds(), default=0) + 1)

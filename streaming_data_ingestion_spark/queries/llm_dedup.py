@@ -361,7 +361,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from array_intersect/array_union, order-insensitive and
     engine-agnostic.
     """
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(_tokens()).alias("ts")
     )
@@ -413,7 +413,7 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, same unit-cost DP definition, so distances are
     integer-identical.
     """
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     a = docs.select(
         F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")
@@ -476,20 +476,22 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint test is one count of lowered labels per round. Each label
     set is a ``localCheckpoint(eager=False)``, which keeps lineage O(1)
     deep but is not free: AQE runs the checkpoint's shuffle stages at
-    the call, so a round costs several jobs. At sf0.01 the key converges
-    in one round and runs 13 jobs (docs/BENCH_NOTES.md, round 15). This
-    is the same alternating-contraction family as large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-    which is the production choice when the pair graph itself is
-    petabyte-scale. Oracle: DuckDB WITH RECURSIVE reachability.
+    the call, so a round costs several jobs. The edges are the shared
+    ``lsh.pairs`` artifact, so a warm call never reruns MinHash: at
+    sf0.01 the key converges in one round and runs 8 jobs warm
+    (docs/BENCH_NOTES.md, round 16). This is the same
+    alternating-contraction family as large-star/small-star (Kiveris et
+    al., "Connected Components in MapReduce and Beyond"), which is the
+    production choice when the pair graph itself is petabyte-scale.
+    Oracle: DuckDB WITH RECURSIVE reachability.
     """
-    # Materialize the LSH pair pipeline once (the union below reads it
-    # twice), then iterate ONLY over vertices that appear in some pair:
-    # unpaired documents trivially keep their own label, and at corpus
-    # scale the active vertex set (LSH collisions) is orders of magnitude
-    # smaller than the corpus — joining the full corpus per round would
-    # be the actual scale bug.
-    pairs = q_dedup_minhash_pairs(spark, sf_dir).persist()
+    # The pair set is the shared ``lsh.pairs`` artifact (the union below
+    # reads it twice; later pair readers read it again). Iterate ONLY over
+    # vertices that appear in some pair: unpaired documents trivially keep
+    # their own label, and at corpus scale the active vertex set (LSH
+    # collisions) is orders of magnitude smaller than the corpus — joining
+    # the full corpus per round would be the actual scale bug.
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
         pairs.selectExpr("doc_b AS src", "doc_a AS dst")
     )
@@ -541,7 +543,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("x.doc_id"), F.col("y.label").alias("label"))
             .localCheckpoint(eager=False)
         )
-    pairs.unpersist()
     docs = load(spark, sf_dir, "documents").select("doc_id")
     lab = labels.withColumnRenamed("doc_id", "vid")
     cluster = F.coalesce(F.col("label"), F.col("doc_id"))
@@ -694,7 +695,7 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate scope, never all pairs. est = n_agree/12 and
     exact = |∩|/|∪| are single IEEE divisions of exact integers.
     """
-    pairs = q_dedup_minhash_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     sigs = _minhash_sigs(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     sh = d.select(
@@ -772,7 +773,7 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal to widen bands or cap buckets. Two tiny aggregates over the
     (collision-sized, never n²) pair list.
     """
-    pairs = q_dedup_minhash_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     # both endpoints explode row-side from ONE pass over the pair list —
     # a union of two selects would replicate the whole LSH pair subtree
     ids = pairs.select(
@@ -823,7 +824,7 @@ def q_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast if the id→source map is dimension-sized); the matrix
     aggregate is ≤|sources|²-sized with map-side partials.
     """
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
     sa = src.select(
         F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a")
@@ -1219,7 +1220,7 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-collision output (collision-sized, never n²), two doc_id equi
     hash joins bring the token sets, the set arithmetic is row-local.
     """
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(_tokens()).alias("ts")
     )
@@ -1416,7 +1417,7 @@ def q_jaccard_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (array_intersect/union are order-insensitive), and the bin edges
     are one multiply + floor of that identical double in both engines.
     """
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(_tokens()).alias("ts")
     )

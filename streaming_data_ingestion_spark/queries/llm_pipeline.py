@@ -990,11 +990,9 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (least/greatest), and one ≤9-group aggregate. At 100 TB this costs
     one pass over the collision set.
     """
-    from streaming_data_ingestion_spark.queries.llm_dedup import (
-        q_dedup_minhash_pairs,
-    )
+    from streaming_data_ingestion_spark.queries.llm_dedup import _lsh_pairs_cached
 
-    pairs = q_dedup_minhash_pairs(spark, sf_dir)
+    pairs = _lsh_pairs_cached(spark, sf_dir)
     sa = _split_of(F.col("doc_a"))
     sb = _split_of(F.col("doc_b"))
     labeled = pairs.select(

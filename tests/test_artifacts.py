@@ -228,3 +228,57 @@ def test_small_persisted_aggregate_is_read_by_one_task(spark):
         assert len(jobs) == 1 and tasks == 1
     finally:
         agg.unpersist()
+
+
+def _group_jobs(sc, group: str, run) -> int:
+    """Jobs that ``run()`` launched under job group ``group``, read from
+    the status store once the listener bus has delivered every event."""
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_keeps_the_shared_pair_set(spark):
+    """q_dedup_clusters reads the ``lsh.pairs`` artifact and leaves it
+    cached: a later pair reader (q_graph_reach) runs the same jobs as it
+    did before q_dedup_clusters ran, instead of recomputing MinHash."""
+    from streaming_data_ingestion_spark.queries import llm_dedup
+
+    sc = spark.sparkContext
+
+    def reach():
+        llm_dedup.q_graph_reach(spark, SF_DIR).collect()
+
+    reach()  # builds the pair set
+    before = _group_jobs(sc, "pairs_reach_before", reach)
+    llm_dedup.q_dedup_clusters(spark, SF_DIR).collect()
+    assert artifacts._LIVE["lsh.pairs"][1].storageLevel.useMemory
+    assert _group_jobs(sc, "pairs_reach_after", reach) == before
+
+
+def test_queries_cache_only_through_artifacts():
+    """Derived frames are cached only through artifacts.py: no module
+    under queries/ calls ``.persist``, ``.cache`` or ``.unpersist`` (a
+    query that unpersists a plan equal to a cached artifact drops the
+    shared entry for every later reader). ``localCheckpoint`` is allowed."""
+    import ast
+
+    root = os.path.join(HERE, "streaming_data_ingestion_spark", "queries")
+    calls = []
+    for name in sorted(os.listdir(root)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(root, name)) as fh:
+            tree = ast.parse(fh.read(), name)
+        calls += [
+            f"{name}:{node.lineno} .{node.func.attr}("
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in {"persist", "cache", "unpersist"}
+        ]
+    assert calls == []

@@ -241,3 +241,35 @@ def test_current_round_falls_back_to_the_next_correctness_round(tmp_path, monkey
     assert keydigest.current_round() == 12
     (tmp_path / "PROGRESS.jsonl").write_text('{"round": 20}\n{"round": 19}\n')
     assert keydigest.current_round() == 20
+
+
+def test_current_round_is_past_every_committed_profile(tmp_path, monkeypatch):
+    """A committed docs/PROFILE_r*.json belongs to a finished round, so
+    the round in progress is past it even when no CORRECTNESS file
+    records that round: bench.py then never rewrites a committed profile
+    or sweep. An untracked profile is the round in progress itself, so a
+    second bench run in that round merges into it."""
+    import subprocess
+
+    import keydigest
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t",
+             "-c", "commit.gpgsign=false", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+        )
+
+    monkeypatch.setattr(keydigest, "HERE", str(tmp_path))
+    (tmp_path / "CORRECTNESS_r13.json").write_text("{}")
+    (tmp_path / "docs").mkdir()
+    (tmp_path / "docs" / "PROFILE_r14.json").write_text("{}")
+    git("init", "-q")
+    assert keydigest.current_round() == 14  # no commit yet: nothing tracked
+    git("add", "-A")
+    git("commit", "-q", "-m", "round 14 profile")
+    assert keydigest.current_round() == 15
+    (tmp_path / "docs" / "PROFILE_r15.json").write_text("{}")  # untracked
+    assert keydigest.current_round() == 15
+    (tmp_path / "CORRECTNESS_r16.json").write_text("{}")
+    assert keydigest.current_round() == 17
