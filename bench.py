@@ -28,7 +28,12 @@ exchange and Python-node counts of the executed plan's tree string, so
 every key gets one record: cold_s, warm_s, build_s, plan_s, jobs,
 stages, tasks, executor run/CPU/GC seconds, shuffle read/write, spill,
 exchanges and python. Layers are those of the pass whose time is the
-warm median.
+warm median. ``compiles`` and ``compile_s`` are the classes Janino
+compiled in that span and their compile time, the deltas of Spark's
+``CodegenMetrics`` compilation-time histogram read around the span
+(``compile_s`` is count times the histogram's sampled mean, so it is
+approximate); a warm pass that compiles anything either missed the
+codegen class cache or generated new code.
 
 Usage:
   python bench.py                      # the three groups; two driver lines
@@ -362,6 +367,13 @@ def _noop(df) -> None:
 _GROUP_SEQ = itertools.count()
 
 
+def _compiled(sc) -> tuple[int, float]:
+    """(classes compiled, their compile milliseconds) so far in this JVM;
+    the milliseconds are the count times the histogram's sampled mean."""
+    h = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return h.getCount(), h.getCount() * h.getSnapshot().getMean()
+
+
 def _execute(spark, fn, sf_dir: str, name: str):
     """One execution of builder ``fn`` under a fresh job group:
     (group, span seconds, builder seconds, the built frame)."""
@@ -380,10 +392,12 @@ def _execute(spark, fn, sf_dir: str, name: str):
     return group, t2 - t0, t1 - t0, df
 
 
-def _layers(sc, group: str) -> dict:
-    """Status-store totals of every job that ran under ``group``."""
+def _layers(sc, group: str, compiled0: tuple[int, float]) -> dict:
+    """Status-store totals of every job that ran under ``group``, and
+    the classes compiled since ``compiled0``."""
     drain_listener_bus(sc)
     t = group_totals(sc, group)
+    n, ms = _compiled(sc)
     return {
         "jobs": t.jobs,
         "stages": t.stages,
@@ -394,6 +408,8 @@ def _layers(sc, group: str) -> dict:
         "shuffle_read_bytes": t.shuffle_read_bytes,
         "shuffle_write_bytes": t.shuffle_write_bytes,
         "spill_bytes": t.spill_bytes,
+        "compiles": n - compiled0[0],
+        "compile_s": round(max(ms - compiled0[1], 0.0) / 1000, 3),
     }
 
 
@@ -435,6 +451,7 @@ def measure(
     def run(name: str, read_layers: bool = True):
         if name in errors:
             return None
+        compiled0 = _compiled(sc)
         try:
             group, span_s, build_s, df = _execute(
                 spark, specs[name].fn, sf_dir, name
@@ -443,7 +460,9 @@ def measure(
             errors[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
             return None
         # read now: the status store keeps only the latest 1000 jobs
-        return span_s, build_s, df, _layers(sc, group) if read_layers else None
+        return span_s, build_s, df, (
+            _layers(sc, group, compiled0) if read_layers else None
+        )
 
     artifacts.clear()
     cold = {name: run(name) for name in names}

@@ -133,6 +133,15 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_sigs_df(load(spark, sf_dir, "documents"))
 
 
+def _minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The signatures persisted once per snapshot under one kind, for
+    the keys that read the 12 minhashes themselves rather than the
+    bands (q_minhash_jaccard, q_lsh_tuning)."""
+    return artifacts.cached(
+        "lsh.sigs", sf_dir, lambda: _minhash_sigs(spark, sf_dir)
+    )
+
+
 def minhash_sigs_df(d: DataFrame) -> DataFrame:
     """Signature core over any (doc_id, text) DataFrame — shared with the
     streaming dedup path (streaming/dedup_stream.py), which uses it to
@@ -688,15 +697,15 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-shingle Jaccard — the estimator and its ground truth in one
     result, which is how a pipeline calibrates its dedup threshold.
 
-    The estimate needs only the 12-long signatures (the LSH index a
-    production system persists anyway — here the lineage recomputes
-    them, at scale you'd read the materialized sigs table); the exact
+    The estimate needs only the 12-long signatures, read from the
+    persisted ``lsh.sigs`` artifact (the LSH index a production system
+    keeps anyway), so a warm call never reruns MinHash; the exact
     side joins per-doc distinct shingle-hash arrays on the *bounded*
     candidate scope, never all pairs. est = n_agree/12 and
     exact = |∩|/|∪| are single IEEE divisions of exact integers.
     """
     pairs = _lsh_pairs_cached(spark, sf_dir)
-    sigs = _minhash_sigs(spark, sf_dir)
+    sigs = _minhash_sigs_cached(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     sh = d.select(
         "doc_id",
@@ -1503,9 +1512,7 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision-scoped, never all-pairs. Thresholds are python-precomputed
     literals, so the only measured quantities are exact BIGINT counts.
     """
-    sigs = artifacts.cached(
-        "q_lsh_tuning.sigs", sf_dir, lambda: _minhash_sigs(spark, sf_dir)
-    )
+    sigs = _minhash_sigs_cached(spark, sf_dir)
     outs = []
     for b, r, thr in _LSH_CONFIGS:
         bands = sigs.select(

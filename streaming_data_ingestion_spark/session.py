@@ -19,6 +19,16 @@ AQE coalesces persisted plans too: by default a cached plan keeps every
 shuffle partition, so a few hundred cached rows (the LSH pair set, a sink
 epoch's delta) ran 32-task stages and wrote one file per partition
 (docs/BENCH_NOTES.md, round 15). Large ones keep advisory-size partitions.
+
+Generated code stays compiled across passes. Spark keeps the classes
+Janino compiles for whole-stage codegen in one LRU cache whose default
+size is 100. One pass over the eight perfbench analytic keys emits
+150-170 distinct classes and one over the registry about 3,600, so a
+program that cycles through its keys evicted each class before its next
+use and recompiled every stage on every pass; a class compiled afresh
+also starts interpreted, so the JIT never warmed it. The cache is sized
+to the measured working set instead, and bench.py records the classes
+each key compiles (docs/BENCH_NOTES.md, round 17).
 """
 
 from __future__ import annotations
@@ -60,6 +70,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # Codegen class cache: the smallest power of two above the
+        # working set of generated classes (bench.py's grouped run
+        # compiles 3,108 classes at sf0.1, all 300 keys 3,780;
+        # keeping them costs about 16 KB of non-heap each, +55 MB over
+        # the registry: BENCH_NOTES round 17). A static conf: it takes
+        # effect only when the JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Arrow for pandas UDFs / toPandas — the only acceptable Python boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic cross-engine timestamps (DuckDB is UTC-naive).

@@ -130,6 +130,7 @@ _RECORD_FIELDS = {
     "cold_s", "warm_s", "cold_only", "build_s", "plan_s", "jobs", "stages",
     "tasks", "run_s", "cpu_s", "gc_s", "shuffle_read_bytes",
     "shuffle_write_bytes", "spill_bytes", "exchanges", "python",
+    "compiles", "compile_s",
 }
 
 
@@ -137,7 +138,9 @@ def test_measure_records_every_layer_and_clears_artifacts_first(spark, monkeypat
     """The one timing loop at sf0.001 over a plain key and a key that
     reads a stored artifact: a full record per key, the status-store
     counts filled in, and exactly one artifacts.clear() that precedes
-    every execution (so the cold pass pays the builds)."""
+    every execution (so the cold pass pays the builds). The warm record
+    of a plain key compiles no class: its generated code stays in the
+    codegen class cache between passes."""
     from tests.conftest import SF_DIR
 
     events: list[str] = []
@@ -165,6 +168,7 @@ def test_measure_records_every_layer_and_clears_artifacts_first(spark, monkeypat
     # counted on the tree string: partial agg -> hash exchange -> final
     # agg -> range exchange (the formatted explain lists each twice)
     assert recs["q_agg_group"]["exchanges"] == 2
+    assert recs["q_agg_group"]["compiles"] == 0
 
 
 def test_scale_stress_auto_pick_ranks_grouped_keys_from_the_profile(tmp_path):
