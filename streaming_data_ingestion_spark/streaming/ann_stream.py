@@ -9,18 +9,18 @@ exactly how production IVF indexes ingest; re-training centroids is a
 separate, rare OPTIMIZE-style rebuild), PQ-encoded with the same
 deterministic codebooks, and appended into the cell partitions.
 
-Exactly-once: rows are appended under a ``cell=X/__epoch=<run>-<E>``
-partition layout with per-write dynamic partition overwrite — the epoch
-value is namespaced by run because Spark epoch ids restart at 0 per
-checkpoint (two runs, or a run beside the bootstrap base, must never
-overwrite each other's slices) — and a replayed epoch
-re-delivers the identical assignment (frozen centroids + deterministic
-codes make the batch a pure function of its input), and the dynamic
-overwrite replaces exactly that epoch's slices instead of duplicating
-them (streaming/sink.overwrite_partitions). Probes are unaffected:
-``cell`` remains the leading partition column, so PartitionFilters
-prune exactly as before and readers that select (vec_id, cell, codes,
-embedding) never see the epoch column.
+Exactly-once: each micro-batch is one append-only epoch of
+streaming/sink.commit_epoch, landed under ``cell=X/__epoch=<ns>-<E>``.
+The namespace is the stream's query id — one per checkpoint, since Spark
+epoch ids restart at 0 for every new checkpoint — so two runs, or a run
+beside the bootstrap base, never overwrite each other's slices. A
+replayed epoch re-delivers the identical assignment (frozen centroids +
+deterministic codes make the batch a pure function of its input), and
+the dynamic overwrite replaces exactly that epoch's slices instead of
+duplicating them. Probes are unaffected: ``cell`` remains the leading
+partition column, so PartitionFilters prune exactly as before and
+readers that select (vec_id, cell, codes, embedding) never see the
+epoch column.
 
 The maintained invariant (pinned by tests/test_streaming.py): after any
 sequence of micro-batches with replays injected anywhere, the stored
@@ -32,18 +32,15 @@ Reader/writer race: a probe that lists the index directory while an
 epoch write is in flight could observe a TORN epoch — some cell
 partitions already renamed into place, others still pending (Spark's
 per-partition commit is not atomic across partitions, and there is no
-table-format transaction log under plain parquet). The fix is the
-minimal version-log discipline, streaming/sink.py's commit log: the
-writer drops a driver-side commit marker (``_commits/<seq>.<run>-<E>``,
-recording a total commit sequence) only AFTER the whole epoch's parquet
-write returns, and consistent readers
-go through ``read_committed_index``, which pins ``__epoch`` to the
-committed-token IN-list — a partition filter, so the in-flight epoch's
-files are pruned without being read.
-A probe therefore sees either the pre-epoch or the post-epoch index,
-never a mix; and because a replayed epoch is a pure function of its
-input, re-running the interrupted epoch heals any torn slices via the
-dynamic partition overwrite (pinned by
+table-format transaction log under plain parquet). The commit log
+fences it: the marker (``_commits/<seq>.<ns>-<E>``, recording a total
+commit sequence) is dropped only AFTER the whole epoch's parquet write
+returns, and consistent readers go through ``read_committed_index``,
+whose ``sink.committed`` bound prunes the in-flight epoch's files
+without reading them. A probe therefore sees either the pre-epoch or
+the post-epoch index, never a mix; and because a replayed epoch is a
+pure function of its input, re-running the interrupted epoch heals any
+torn slices (pinned by
 tests/test_streaming.py::test_ann_fold_in_probe_never_sees_torn_epoch).
 """
 
@@ -51,6 +48,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,11 +56,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from streaming_data_ingestion_spark.compat import dlit_array
 from streaming_data_ingestion_spark.streaming.sink import (
-    _claim_namespace,
-    _epoch_token,
+    commit_epoch,
+    committed,
     committed_epochs,
-    mark_epoch_committed,
-    overwrite_partitions,
     start,
 )
 
@@ -113,63 +109,21 @@ def assign_to_centroids(
 def fold_in_writer(
     index_path: str,
     centroids: list[tuple[int, list[float]]],
-    run_ns: str = "default",
-    owner: str | None = None,
+    run_ns: str | None = None,
 ):
     """foreachBatch writer: assign + encode this batch against the
-    frozen quantizer and land it under cell=…/__epoch=<ns>-<E> with
-    dynamic partition overwrite (replay-idempotent by construction).
-
-    The epoch partition value is NAMESPACED by ``run_ns``: Spark epoch
-    ids restart at 0 for every new checkpoint, so two successive streams
-    feeding the same index — or a stream landing next to the bootstrap
-    base epoch — would otherwise dynamic-OVERWRITE each other's slices
-    (silent data loss; caught by the e2e composition test). Distinct
-    namespaces can never collide; a replay of THIS run's epoch still
-    replaces exactly its own slices.
-
-    ``owner`` (set by maintain_ann_index to the checkpoint dir) claims
-    the namespace: a different stream reusing it fails loudly instead of
-    silently no-opping against the first run's commit markers. A direct
-    caller that supplies NO owner gets a weaker but still loud guard
-    (ADVICE r9): if the namespace already carries commit markers when
-    this writer's first batch arrives, the writer refuses — a fresh
-    stream restarting epoch ids at 0 over a used namespace is exactly
-    the silent-no-op data-loss path the claim exists to prevent, and
-    an ownerless writer has no way to prove the markers are its own."""
-
-    fresh_writer = [True]
+    frozen quantizer and commit it as one append-only epoch under
+    cell=…/__epoch=<ns>-<E> (streaming/sink.commit_epoch: the namespace
+    is the running query's id unless ``run_ns`` is given)."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if owner is not None:
-            _claim_namespace(index_path, run_ns, owner)
-        elif fresh_writer[0]:
-            prefix = run_ns + "-"
-            if any(
-                tok.startswith(prefix)
-                for _, tok in committed_epochs(index_path)
-            ):
-                raise ValueError(
-                    f"run namespace {run_ns!r} of index {index_path!r} "
-                    "already has committed epochs and this writer was "
-                    "built without an owner; its batches would silently "
-                    "no-op against the previous run's markers. Pass "
-                    "owner= (maintain_ann_index does) or use a fresh "
-                    "run_ns"
-                )
-        fresh_writer[0] = False
-        # completed-epoch replay: no-op. The rows are already identical
-        # (pure function of input), and rewriting them would swap file
-        # names under any probe currently scanning the committed epoch
-        # — a stale-file-index failure the marker lets us avoid for free
-        token = _epoch_token(run_ns, epoch_id)
-        if any(tok == token for _, tok in committed_epochs(index_path)):
-            return
-        rows = assign_to_centroids(batch_df, centroids).withColumn(
-            "__epoch", F.lit(token)
+        commit_epoch(
+            assign_to_centroids(batch_df, centroids),
+            index_path,
+            epoch_id,
+            "cell",
+            run_ns=run_ns,
         )
-        overwrite_partitions(rows, index_path, "cell", "__epoch")
-        mark_epoch_committed(index_path, epoch_id, run_ns)
 
     return write_batch
 
@@ -178,26 +132,21 @@ def read_committed_index(
     spark: SparkSession, index_path: str, as_of_seq: int | None = None
 ) -> DataFrame:
     """Consistent snapshot of the folded index: only rows of committed
-    epochs. ``__epoch`` is a partition column and the committed set is
-    a literal IN-list over it, so the bound is a PartitionFilter — an
+    epochs, bounded by ``sink.committed`` — a PartitionFilter, so an
     in-flight (torn) epoch's directories are pruned before any of its
-    files are opened. The list length is the epoch count, which the
-    rebuild_due compaction budget keeps bounded. Columns match what the
-    batch probes read: (vec_id, cell, codes, embedding).
+    files are opened. Columns match what the batch probes read:
+    (vec_id, cell, codes, embedding).
 
     ``as_of_seq`` is time travel: epochs are append-only and immutable
     once committed, so including only commit sequences ≤ the cap
     reproduces the index exactly as it stood after that commit — the
     zero-cost replica of a table format's VERSION AS OF, for debugging
     and repro at any scale (pinned in tests/test_streaming.py)."""
-    tokens = [
-        tok
-        for seq, tok in committed_epochs(index_path)
-        if as_of_seq is None or seq <= as_of_seq
-    ]
-    base = spark.read.parquet(index_path)
-    bound = F.col("__epoch").isin(tokens) if tokens else F.lit(False)
-    return base.filter(bound).select("vec_id", "cell", "codes", "embedding")
+    return (
+        spark.read.parquet(index_path)
+        .filter(committed(index_path, as_of_seq))
+        .select("vec_id", "cell", "codes", "embedding")
+    )
 
 
 def maintain_ann_index(
@@ -205,22 +154,15 @@ def maintain_ann_index(
     index_path: str,
     checkpoint_dir: str,
     centroids: list[tuple[int, list[float]]],
-    run_ns: str = "default",
 ) -> StreamingQuery:
     """Continuously fold a vector stream into the stored IVFPQ index.
     Probe the result with queries/llm_similarity.ivfpq_probe-style
-    readers — ``cell`` stays the leading partition column.
-
-    ``run_ns`` MUST be distinct per logical stream (i.e. per checkpoint
-    directory): epoch ids restart at 0 for every new checkpoint, and the
-    namespace is what keeps a second stream from dynamic-overwriting the
-    first one's epoch slices. The namespace is CLAIMED by this stream's
-    checkpoint directory on first write, so accidental reuse fails
-    loudly instead of silently dropping batches."""
+    readers — ``cell`` stays the leading partition column. Each
+    checkpoint's epochs live in its own query-id namespace, so a fresh
+    checkpoint over the same index adds to it and never replaces an
+    earlier run's slices."""
     return start(
-        vectors_stream,
-        fold_in_writer(index_path, centroids, run_ns, owner=checkpoint_dir),
-        checkpoint_dir,
+        vectors_stream, fold_in_writer(index_path, centroids), checkpoint_dir
     )
 
 
@@ -293,21 +235,26 @@ def load_centroids(gen_path: str) -> list[tuple[int, list[float]]]:
         return [(int(c), [float(x) for x in v]) for c, v in json.load(fh)]
 
 
-def _write_base_epoch(
-    vectors: DataFrame,
-    gen_path: str,
+def _publish_base_generation(
+    index_root: str,
+    rows: DataFrame,
     centroids: list[tuple[int, list[float]]],
-) -> None:
-    # the base lives in its own "base" namespace: stream fold-ins start
-    # at epoch 0 for every new checkpoint, and a shared namespace would
-    # let the first micro-batch dynamic-overwrite the base slices
-    rows = assign_to_centroids(vectors, centroids).withColumn(
-        "__epoch", F.lit(_epoch_token("base", 0))
-    )
-    rows.write.partitionBy("cell", "__epoch").parquet(gen_path)
+) -> int:
+    """Write ``rows`` (vec_id, cell, codes, embedding) as the one base
+    epoch of the next generation, beside the quantizer that routed them,
+    then publish it. A directory already at that number is a crashed
+    attempt that was never published, so it is removed first. The base
+    commits in its own ``base`` namespace, which no stream's query id
+    can equal, so fold-ins never overwrite it."""
+    gen = latest_generation(index_root) + 1
+    gen_path = _generation_path(index_root, gen)
+    shutil.rmtree(gen_path, ignore_errors=True)
+    os.makedirs(gen_path)
     with open(os.path.join(gen_path, _CENTROIDS), "w") as fh:
         json.dump([[c, v] for c, v in centroids], fh)
-    mark_epoch_committed(gen_path, 0, "base")
+    commit_epoch(rows, gen_path, 0, "cell", run_ns="base")
+    publish_generation(index_root, gen)
+    return gen
 
 
 def bootstrap_index(
@@ -323,16 +270,9 @@ def bootstrap_index(
 
     cents, _ = kmeans_fit(vectors, k=k_cells, n_iters=n_iters)
     pairs = [(i, c) for i, c in enumerate(cents)]
-    gen = latest_generation(index_root) + 1
-    os.makedirs(index_root, exist_ok=True)
-    gen_path = _generation_path(index_root, gen)
-    if os.path.isdir(gen_path):  # crashed prior attempt — never published
-        import shutil
-
-        shutil.rmtree(gen_path)
-    _write_base_epoch(vectors, gen_path, pairs)
-    publish_generation(index_root, gen)
-    return gen
+    return _publish_base_generation(
+        index_root, assign_to_centroids(vectors, pairs), pairs
+    )
 
 
 def rebuild_ann_index(
@@ -358,15 +298,9 @@ def rebuild_ann_index(
     )
     cents, _ = kmeans_fit(vecs, k=k_cells, n_iters=n_iters)
     pairs = [(i, c) for i, c in enumerate(cents)]
-    gen = latest_generation(index_root) + 1
-    gen_path = _generation_path(index_root, gen)
-    if os.path.isdir(gen_path):  # crashed prior attempt — never published
-        import shutil
-
-        shutil.rmtree(gen_path)
-    _write_base_epoch(vecs, gen_path, pairs)
-    publish_generation(index_root, gen)
-    return gen
+    return _publish_base_generation(
+        index_root, assign_to_centroids(vecs, pairs), pairs
+    )
 
 
 def probe_generation(
@@ -406,8 +340,7 @@ def probe_generation(
     )[:nprobe]
     probes = [c for _, c in ranked]
 
-    tokens = [tok for _, tok in committed_epochs(gen_path)]
-    epoch_bound = F.col("__epoch").isin(tokens) if tokens else F.lit(False)
+    epoch_bound = committed(gen_path)
     idx = (
         spark.read.parquet(gen_path)
         .filter(F.col("cell").isin(*probes) & epoch_bound)
@@ -446,8 +379,6 @@ def vacuum_index(index_root: str, keep: int = 1) -> list[int]:
     so maintenance operations (rebuild, compact, vacuum) are serialized
     under the same single-maintainer assumption the commit sequence
     already makes; probes need no such exclusion."""
-    import shutil
-
     latest = latest_generation(index_root)
     if latest < 0:
         return []
@@ -510,19 +441,8 @@ def compact_generation(spark: SparkSession, index_root: str) -> int:
     Same isolation as rebuild: immutable new directory, one atomic
     pointer rename, crashed attempts are unpublished debris."""
     gen_path = resolve_index(index_root)
-    centroids = load_centroids(gen_path)
-    rows = read_committed_index(spark, gen_path).withColumn(
-        "__epoch", F.lit(_epoch_token("base", 0))
+    return _publish_base_generation(
+        index_root,
+        read_committed_index(spark, gen_path),
+        load_centroids(gen_path),
     )
-    gen = latest_generation(index_root) + 1
-    new_path = _generation_path(index_root, gen)
-    if os.path.isdir(new_path):  # crashed prior attempt — never published
-        import shutil
-
-        shutil.rmtree(new_path)
-    rows.write.partitionBy("cell", "__epoch").parquet(new_path)
-    with open(os.path.join(new_path, _CENTROIDS), "w") as fh:
-        json.dump([[c, v] for c, v in centroids], fh)
-    mark_epoch_committed(new_path, 0, "base")
-    publish_generation(index_root, gen)
-    return gen

@@ -43,7 +43,11 @@ from streaming_data_ingestion_spark.queries.sketches import (
     _bucket,
     cms_grid_partial,
 )
-from streaming_data_ingestion_spark.streaming.sink import merge_additive, start
+from streaming_data_ingestion_spark.streaming.sink import (
+    merge_additive,
+    read_if_exists,
+    start,
+)
 
 
 def _shape_path(table_path: str) -> str:
@@ -56,22 +60,16 @@ def _shape_path(table_path: str) -> str:
 def _read_shape(spark: SparkSession, table_path: str) -> tuple[int, int] | None:
     """The persisted grid shape, or None ONLY when the sidecar does not
     exist (a table that predates it). Any other failure — a transient
-    read error, a corrupt sidecar — re-raises: swallowing it would let a
-    mis-configured writer treat the table as legacy, publish ITS shape
-    over the correct sidecar, and merge mis-shaped partials — the exact
-    corruption the guard exists to prevent (ADVICE r12)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.parquet(_shape_path(table_path)).collect()[0]
-        return int(row["width"]), int(row["depth"])
-    except AnalysisException as e:
-        getter = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", lambda: None
-        )
-        if "PATH_NOT_FOUND" in (getter() or "") or "PATH_NOT_FOUND" in str(e):
-            return None
-        raise
+    read error, a corrupt sidecar — re-raises (``sink.read_if_exists``):
+    swallowing it would let a mis-configured writer treat the table as
+    legacy, publish ITS shape over the correct sidecar, and merge
+    mis-shaped partials — the exact corruption the guard exists to
+    prevent."""
+    sidecar = read_if_exists(spark, _shape_path(table_path))
+    if sidecar is None:
+        return None
+    row = sidecar.collect()[0]
+    return int(row["width"]), int(row["depth"])
 
 
 def _publish_shape(

@@ -8,14 +8,14 @@ batch, not earlier in this batch — and appends the novel digests to the
 index so later batches (and later runs over the same checkpoint) dedup
 against them.
 
-Exactly-once mechanics (streaming/sink.overwrite_partitions): both the
-survivor output and the index append land in ``epoch=N`` partitions via
-dynamic overwrite, so a replayed micro-batch rewrites ITS OWN
-partitions instead of double-appending.
-The membership probe reads the index as of the PREVIOUS epochs — a
-failed attempt's partial epoch partition is overwritten by its replay
-before any later epoch can exist, so replays converge to the same
-bytes.
+Exactly-once mechanics (streaming/sink.commit_epoch): each micro-batch
+is one append-only epoch. The index append and the survivor output land
+in the epoch's own ``__epoch=<ns>-<E>`` partitions, and one commit
+marker follows both writes. The membership probe reads only committed
+index epochs — so a failed attempt's partial append is invisible to its
+replay, which converges to the same bytes, and a fresh checkpoint (a new
+namespace) dedups against every earlier run's digests instead of
+overwriting them.
 
 Scale shape: the only per-batch wide work is one anti join of the
 batch's digests (64-hex keys, not document bodies) against the stored
@@ -25,13 +25,16 @@ digest; everything else is row-local hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 from pyspark.sql.streaming import StreamingQuery
 
 from streaming_data_ingestion_spark.streaming.sink import (
+    EPOCH_COL,
+    commit_epoch,
+    committed,
     overwrite_partitions,
+    read_if_exists,
     start,
 )
 
@@ -51,9 +54,8 @@ def dedup_against_index(
     """Emit only never-seen-before documents; grow the digest index."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         # within-batch keeper: smallest doc_id per digest, deterministic
-        batch = (
+        novel = (
             batch_df.withColumn("digest", _digest())
             .groupBy("digest")
             .agg(
@@ -61,34 +63,30 @@ def dedup_against_index(
                 F.first("text").alias("text"),
             )
         )
-        try:
-            seen = (
-                spark.read.parquet(index_path)
-                .filter(F.col("epoch") < epoch_id)
-                .select("digest")
+        seen = read_if_exists(batch_df.sparkSession, index_path)
+        if seen is not None:
+            novel = novel.join(
+                seen.filter(committed(index_path)).select("digest"),
+                "digest",
+                "left_anti",
             )
-            novel = batch.join(seen, "digest", "left_anti")
-        except AnalysisException as e:
-            # ONLY the genuinely-missing-index case may be treated as
-            # "everything is novel" — swallowing a transient read error
-            # here would silently re-emit the whole corpus as new
-            # (the bare-except-overwrites-history bug class)
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            novel = batch  # first epoch ever: no index yet
         novel = novel.persist()
-        try:
+
+        def write(rows: DataFrame, token: str) -> None:
             overwrite_partitions(
                 novel.select("doc_id", "text", "digest").withColumn(
-                    "epoch", F.lit(epoch_id)
+                    EPOCH_COL, F.lit(token)
                 ),
                 out_path,
-                "epoch",
+                EPOCH_COL,
             )
-            overwrite_partitions(
-                novel.select("digest").withColumn("epoch", F.lit(epoch_id)),
-                index_path,
-                "epoch",
+            # the index last: a write to a path drops every cached plan
+            # that reads it, so writing it first would recompute `novel`
+            overwrite_partitions(rows, index_path, EPOCH_COL)
+
+        try:
+            commit_epoch(
+                novel.select("digest"), index_path, epoch_id, write=write
             )
         finally:
             novel.unpersist()

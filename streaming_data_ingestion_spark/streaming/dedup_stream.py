@@ -38,10 +38,7 @@ from streaming_data_ingestion_spark.queries.llm_dedup import (
     _shingles,
     _tokens,
 )
-from streaming_data_ingestion_spark.streaming.sink import (
-    overwrite_partitions,
-    start,
-)
+from streaming_data_ingestion_spark.streaming.sink import commit_epoch, start
 
 
 def _affine_min(a: int, b: int) -> Column:
@@ -94,7 +91,9 @@ def flag_neardups(
     """Continuously flag incoming docs that share ANY LSH band with the
     historical corpus. Flags land as parquet (doc_id) rows in
     ``out_dir`` — the candidate set a downstream exact verify
-    (q_dedup_ngram_jaccard shape) consumes.
+    (q_dedup_ngram_jaccard shape) consumes; read them through
+    ``sink.committed(out_dir)`` for a snapshot that excludes an
+    in-flight epoch.
 
     The semi join keeps the stream side stateless; per-batch DISTINCT
     is batch-local (each doc arrives once), so no cross-batch state
@@ -108,14 +107,8 @@ def flag_neardups(
     )
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # epoch-keyed dynamic overwrite: a replayed micro-batch rewrites
-        # ITS OWN epoch partition instead of appending duplicates
-        overwrite_partitions(
-            batch_df.select("doc_id")
-            .distinct()
-            .withColumn("epoch", F.lit(epoch_id)),
-            out_dir,
-            "epoch",
-        )
+        # one append-only epoch: a replay rewrites ITS OWN partition, and
+        # a fresh checkpoint's epochs land beside an earlier run's
+        commit_epoch(batch_df.select("doc_id").distinct(), out_dir, epoch_id)
 
     return start(flagged, write_batch, checkpoint_dir)

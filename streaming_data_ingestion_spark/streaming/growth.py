@@ -9,10 +9,13 @@ first_day) index answers "is this user new?" per micro-batch without
 ever rescanning history, and a (day, new_users) table accumulates the
 growth curve a dashboard reads directly.
 
-Exactly-once mechanics are streaming/sink.py's: the index appends land
-in ``epoch=N`` partitions via ``overwrite_partitions``, so a replayed
-micro-batch rewrites ITS OWN partition instead of double-appending; the
-day counts go through ``merge_additive``'s replay-skip merge.
+Exactly-once mechanics are streaming/sink.py's: each micro-batch is one
+``commit_epoch`` — the index append lands in the epoch's own
+``__epoch=<ns>-<E>`` partition, the day counts go through
+``merge_additive``'s replay-skip merge, and one commit marker follows
+both writes. "Is this user new?" reads only committed epochs, so a
+replay never sees its own failed attempt's partial append, and a fresh
+checkpoint (a new namespace) sees every earlier run's users.
 
 Scale shape: the only per-batch wide work is one user-keyed aggregate
 over the batch plus one anti join of the batch's candidate users
@@ -26,30 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from streaming_data_ingestion_spark.streaming.sink import (
+    EPOCH_COL,
+    commit_epoch,
+    committed,
     merge_additive,
     overwrite_partitions,
+    read_if_exists,
     start,
 )
-
-
-def _prior_index(spark: SparkSession, index_path: str, epoch_id: int):
-    """First-seen index as of PREVIOUS epochs (a replayed batch must not
-    see its own failed attempt's partial append)."""
-    try:
-        idx = spark.read.parquet(index_path)
-    except AnalysisException as e:
-        # ONLY the genuinely-missing-index case may be treated as "no
-        # prior users" — swallowing a transient read error here would
-        # silently re-count the whole user base as new (the
-        # bare-except-overwrites-history bug class; see
-        # streaming/dedup_index.py for the motivating incident)
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        return None
-    return idx.where(F.col("epoch") < F.lit(epoch_id))
 
 
 def first_seen_batch_writer(
@@ -67,16 +56,16 @@ def first_seen_batch_writer(
         cand = batch_df.groupBy("user_id").agg(
             F.min(F.to_date("ts")).alias("first_day")
         )
-        prior = _prior_index(spark, index_path, epoch_id)
+        prior = read_if_exists(spark, index_path)
         if prior is not None:
             cand = cand.join(
-                prior.select("user_id"), "user_id", "left_anti"
+                prior.filter(committed(index_path)).select("user_id"),
+                "user_id",
+                "left_anti",
             )
-        cand = cand.withColumn("epoch", F.lit(epoch_id)).persist()
-        try:
-            # index append: replayed epochs overwrite their own partition
-            overwrite_partitions(cand, index_path, "epoch")
-            # daily growth counts: replay-skip merge keyed on (day)
+        cand = cand.persist()
+
+        def write(rows: DataFrame, _token: str) -> None:
             merge_additive(
                 cand.groupBy(F.col("first_day").alias("day")).agg(
                     F.count(F.lit(1)).cast("long").alias("new_users")
@@ -88,6 +77,12 @@ def first_seen_batch_writer(
                 epoch_id=epoch_id,
                 run_ns=run_ns,
             )
+            # the index last: a write to a path drops every cached plan
+            # that reads it, so writing it first would recompute `cand`
+            overwrite_partitions(rows, index_path, EPOCH_COL)
+
+        try:
+            commit_epoch(cand, index_path, epoch_id, run_ns=run_ns, write=write)
         finally:
             cand.unpersist()
 

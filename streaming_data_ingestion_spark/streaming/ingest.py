@@ -12,10 +12,9 @@ Defects fixed (each cited in SURVEY.md §2A):
 - no checkpointLocation (:216-221) → always checkpointed, so restarts
   resume from offsets instead of re-ingesting the topic;
 - ``epoch_id`` ignored in the sink (:180) → the checkpoint prevents
-  re-processing across restarts, and ``run_ingest_exactly_once`` goes
-  further: it keys the write on the epoch so even a retried micro-batch
-  lands idempotently (blind append, as in ``run_ingest``, is
-  at-least-once if a batch is retried mid-write).
+  re-processing across restarts, and every micro-batch lands as one
+  ``sink.commit_epoch``, so even a batch retried mid-write lands exactly
+  once, and a fresh checkpoint's epochs land beside an earlier run's.
 
 The source is pluggable: the file JSON stream in tests, Kafka in
 production (sources/kafka.py) — everything from decode onward is shared.
@@ -29,6 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from streaming_data_ingestion_spark.sources.json_stream import USERS_WIRE_SCHEMA
 from streaming_data_ingestion_spark.streaming.sink import (
+    commit_epoch,
     overwrite_partitions,
     start,
 )
@@ -62,68 +62,26 @@ def decode_users_from_files(stream: DataFrame) -> DataFrame:
     return stream.withColumn("user_id", F.expr("uuid()"))
 
 
-def run_ingest(
-    decoded: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
+def ingest_users_from_json_dir(
+    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
 ) -> StreamingQuery:
-    """Checkpointed micro-batch append into parquet via foreachBatch.
+    """End-to-end: JSON-lines dir → decode → keyed records → parquet.
 
     foreachBatch keeps the reference's sink shape
     (/root/reference/spark-streaming.py:216-221) — per-batch bridge to a
-    batch writer — with the checkpoint the reference forgot.
+    batch writer — with the checkpoint the reference forgot, and each
+    batch committed once under ``__epoch=<query id>-<E>``.
     ``availableNow`` drains everything currently available then stops:
     the Spark-native replacement for the reference's 30-second wall-clock
     producer loop (/root/reference/dags/kafka-streamer.py:38-49).
     """
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # mode('append') parity with the reference's Cassandra write
-        # (/root/reference/spark-streaming.py:193-197)
-        batch_df.write.mode("append").parquet(out_dir)
-
-    return start(decoded, write_batch, checkpoint_dir)
-
-
-def epoch_overwrite_writer(out_dir: str):
-    """foreachBatch writer that is idempotent under micro-batch retry.
-
-    Each epoch writes into its own ``__epoch=N`` partition with dynamic
-    partition overwrite: a retry of epoch N replaces exactly epoch N's
-    files and touches nothing else, so replays cannot duplicate rows —
-    the exactly-once property the reference's sink (and a naive blind
-    append) lacks. This is the parquet-only equivalent of a
-    transactional MERGE keyed on the batch id.
-    """
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        overwrite_partitions(
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id))),
-            out_dir,
-            "__epoch",
-        )
-
-    return write_batch
-
-
-def run_ingest_exactly_once(
-    decoded: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Checkpointed ingest with an epoch-idempotent sink (see
-    :func:`epoch_overwrite_writer`)."""
-    return start(decoded, epoch_overwrite_writer(out_dir), checkpoint_dir)
-
-
-def ingest_users_from_json_dir(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-) -> StreamingQuery:
-    """End-to-end: JSON-lines dir → decode → keyed records → parquet."""
     from streaming_data_ingestion_spark.sources.json_stream import read_json_stream
 
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        commit_epoch(batch_df, out_dir, epoch_id)
+
     stream = read_json_stream(spark, in_dir)
-    return run_ingest(decode_users_from_files(stream), out_dir, checkpoint_dir)
+    return start(decode_users_from_files(stream), write_batch, checkpoint_dir)
 
 
 def split_users_with_raw(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -146,11 +104,13 @@ def dlq_writer(out_dir: str, dlq_dir: str):
     its corrupt slice — FAILFAST aborts the pipeline, silent PERMISSIVE
     dropping destroys the evidence; a DLQ does neither.
 
-    Both sinks are epoch-partitioned dynamic overwrites (the
-    epoch_overwrite_writer pattern): a retried micro-batch rewrites its
-    own ``__epoch`` partition instead of appending duplicates — with
-    synthesized uuid keys a blind append's duplicates would be
-    undetectable downstream.
+    Both sinks are epoch-partitioned dynamic overwrites: a retried
+    micro-batch rewrites its own ``__epoch`` partition instead of
+    appending duplicates — with synthesized uuid keys a blind append's
+    duplicates would be undetectable downstream. The partitions carry the
+    bare epoch number, not a namespaced ``sink.commit_epoch`` token, so a
+    fresh checkpoint over the same directories overwrites an earlier
+    run's epochs.
     """
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:

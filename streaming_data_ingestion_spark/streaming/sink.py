@@ -8,17 +8,17 @@ module gives the second, for every foreachBatch sink in the package:
 - :func:`start` — the one way a maintainer starts its stream
   (checkpointed, ``availableNow``).
 - :func:`overwrite_partitions` — the one dynamic partition overwrite.
-  An epoch that writes its own partition (``epoch=N``) is replaced
-  whole on replay, never appended twice.
 - :func:`merge_additive` — read-merge-overwrite for additive
   aggregates. Every stored row carries a ``last_epoch`` stamp; a
   replayed epoch skips the partition tuples already stamped with its
   own marker.
-- the commit log (:func:`mark_epoch_committed`,
-  :func:`committed_epochs`) — for append-only sinks whose epochs land
-  in their own partitions. A marker is dropped only after the epoch's
-  write returns; a replay of a committed epoch is a no-op, and readers
-  pin the committed set.
+- :func:`commit_epoch` — the one append-only epoch write. The epoch
+  lands in its own ``__epoch=<namespace>-<epoch>`` partition, then a
+  commit marker is dropped; a replay of a committed epoch is a no-op,
+  and a replay of an uncommitted one overwrites its own partial
+  partition. Readers bound ``__epoch`` with :func:`committed`.
+- :func:`read_if_exists` — the one "missing table" read: None only for
+  a path that does not exist, every other read error propagates.
 
 Why two disciplines and not one: a read-merge-overwrite rewrites rows
 that earlier epochs already merged. A commit marker written after that
@@ -27,14 +27,15 @@ delta a second time. The per-partition stamp lands in the same files as
 the merged rows, so it cannot be lost separately. An append-only epoch
 touches no earlier rows, so a marker after the write is enough.
 
-Namespaces: foreachBatch epoch ids restart at 0 for every new
-checkpoint. Markers are therefore ``"<namespace>:<epoch>"``, and the
-namespace defaults to the running query's id. Spark sets the local
-property ``sql.streaming.queryId`` on the thread that runs the batch;
-it holds the id recorded in the checkpoint's ``metadata`` file, which
-is stable across restarts of one checkpoint and fresh for a new one.
-An explicit ``run_ns`` always wins (direct callers, replays driven by
-hand).
+One namespace rule for both: foreachBatch epoch ids restart at 0 for
+every new checkpoint, so stamps (``"<namespace>:<epoch>"``) and tokens
+(``"<namespace>-<epoch>"``) carry a namespace, which is the running
+query's id. Spark sets the local property ``sql.streaming.queryId`` on
+the thread that runs the batch; it holds the id recorded in the
+checkpoint's ``metadata`` file, stable across restarts of one
+checkpoint and fresh for a new one, so two checkpoints never share a
+namespace and a fresh checkpoint never touches an earlier run's
+epochs. An explicit ``run_ns`` always wins (replays driven by hand).
 """
 
 from __future__ import annotations
@@ -48,10 +49,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-_EPOCH_COL = "last_epoch"
+_STAMP_COL = "last_epoch"
 _COMMITS_DIR = "_commits"  # leading "_" => invisible to parquet readers
 _COMMIT_MINT_LOCK = threading.Lock()  # serializes sequence minting
-_NS_CLAIM_PREFIX = "_ns."  # namespace → owner registration files
+EPOCH_COL = "__epoch"  # append-only epochs land in partitions of this column
 
 
 def start(
@@ -117,19 +118,25 @@ def _part_member(part_cols: list[str], tuples: list[tuple]) -> Column:
     return out
 
 
-def _read_existing(spark: SparkSession, table_path: str, member: Column):
-    """Read the touched slice of the table; None only if the table truly
-    does not exist yet. Any OTHER read failure propagates — swallowing a
-    transient listing error here would make the merge treat a populated
-    table as empty and dynamically overwrite history with one batch's
-    delta."""
+def read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None only when ``path`` does not
+    exist yet. Any OTHER read failure propagates — treating a transient
+    listing error as "no table" would make a merge overwrite history
+    with one batch's delta, or a dedup re-emit the whole corpus."""
     try:
-        return spark.read.parquet(table_path).filter(member)
+        return spark.read.parquet(path)
     except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+        if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+
+
+def _namespace(spark: SparkSession, run_ns: str | None) -> str | None:
+    """``run_ns`` when given, else the running query's id; None for a
+    direct call outside any stream."""
+    if run_ns is not None:
+        return run_ns
+    return spark.sparkContext.getLocalProperty("sql.streaming.queryId")
 
 
 def merge_additive(
@@ -152,9 +159,7 @@ def merge_additive(
     when given, else the running query's id; a direct call outside any
     stream with no ``run_ns`` stamps the bare epoch number."""
     spark = delta.sparkSession
-    ns = run_ns
-    if ns is None:
-        ns = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    ns = _namespace(spark, run_ns)
     marker = f"{ns}:{epoch_id}" if ns is not None else str(epoch_id)
     delta.persist()
     existing = None
@@ -165,14 +170,13 @@ def merge_additive(
         ]
         if not touched:
             return
-        existing = _read_existing(
-            spark, table_path, _part_member(part_cols, touched)
-        )
+        existing = read_if_exists(spark, table_path)
         if existing is not None:
+            existing = existing.filter(_part_member(part_cols, touched))
             existing.persist()
             applied = {
                 tuple(r[c] for c in part_cols)
-                for r in existing.filter(F.col(_EPOCH_COL) == marker)
+                for r in existing.filter(F.col(_STAMP_COL) == marker)
                 .select(*part_cols)
                 .distinct()
                 .collect()
@@ -186,13 +190,13 @@ def merge_additive(
         delta_m = delta.filter(member)
         if existing is not None:
             merged = (
-                delta_m.unionByName(existing.filter(member).drop(_EPOCH_COL))
+                delta_m.unionByName(existing.filter(member).drop(_STAMP_COL))
                 .groupBy(*key_cols)
                 .agg(*[F.sum(c).alias(c) for c in sum_cols])
             )
         else:
             merged = delta_m
-        stamped = merged.withColumn(_EPOCH_COL, F.lit(marker))
+        stamped = merged.withColumn(_STAMP_COL, F.lit(marker))
         overwrite_partitions(stamped, table_path, *part_cols)
     finally:
         if existing is not None:
@@ -201,7 +205,7 @@ def merge_additive(
 
 
 # --------------------------------------------------------------------------
-# Commit log for append-only sinks: ``<path>/_commits/<seq>.<ns>-<epoch>``.
+# Append-only epochs behind a commit log: ``<path>/_commits/<seq>.<token>``.
 # --------------------------------------------------------------------------
 
 
@@ -214,34 +218,56 @@ def _epoch_token(run_ns: str, epoch_id: int) -> str:
     return f"{run_ns}-{int(epoch_id)}"
 
 
-def _claim_namespace(path: str, run_ns: str, owner: str) -> None:
-    """Register ``owner`` (the stream's checkpoint dir) as the holder of
-    ``run_ns`` at ``path``, or raise if a DIFFERENT owner already holds
-    it. Without this, a second stream reusing a namespace would find the
-    first run's commit markers and silently no-op its own batches — its
-    checkpoint would record them as processed while their rows never
-    landed (unrecoverable silent data loss). The claim makes namespace
-    reuse fail loudly instead."""
-    commits = os.path.join(path, _COMMITS_DIR)
-    os.makedirs(commits, exist_ok=True)
-    claim = os.path.join(commits, _NS_CLAIM_PREFIX + run_ns)
-    with _COMMIT_MINT_LOCK:
-        if os.path.exists(claim):
-            with open(claim) as fh:
-                holder = fh.read().strip()
-            if holder != owner:
-                raise ValueError(
-                    f"run namespace {run_ns!r} of index {path!r} is "
-                    f"owned by checkpoint {holder!r}; this stream "
-                    f"(checkpoint {owner!r}) must use a fresh run_ns — "
-                    "epoch ids restart at 0 per checkpoint, so reusing a "
-                    "namespace would silently drop this stream's batches"
-                )
-            return
-        tmp = claim + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(owner)
-        os.replace(tmp, claim)
+def commit_epoch(
+    df: DataFrame,
+    path: str,
+    epoch_id: int,
+    *part_cols: str,
+    run_ns: str | None = None,
+    write: Callable[[DataFrame, str], None] | None = None,
+) -> None:
+    """Land ``df`` as one append-only epoch of the table at ``path``,
+    exactly once.
+
+    The epoch's token is ``<namespace>-<epoch>``, the namespace being
+    ``run_ns`` when given, else the running query's id (``"default"``
+    for a direct call outside any stream). A token already in the commit
+    log returns without writing: the rows are in place, and rewriting
+    them would swap file names under a reader scanning them. Otherwise
+    the rows, tagged ``__epoch=<token>``, replace that partition (under
+    ``part_cols``) — so a replay heals its own crashed attempt and never
+    touches another epoch, nor another checkpoint's — and the marker is
+    dropped after the write returns.
+
+    ``write(rows, token)`` replaces the default write. An epoch that
+    lands more than one table does all its writes there, so its one
+    marker follows its last write."""
+    ns = _namespace(df.sparkSession, run_ns)
+    ns = "default" if ns is None else ns
+    token = _epoch_token(ns, epoch_id)
+    if any(tok == token for _, tok in committed_epochs(path)):
+        return
+    rows = df.withColumn(EPOCH_COL, F.lit(token))
+    if write is None:
+        overwrite_partitions(rows, path, *part_cols, EPOCH_COL)
+    else:
+        write(rows, token)
+    mark_epoch_committed(path, epoch_id, ns)
+
+
+def committed(path: str, as_of_seq: int | None = None) -> Column:
+    """The committed-epoch predicate: ``__epoch`` IN the tokens of
+    ``path``'s commit log (those with commit sequence ≤ ``as_of_seq``
+    when given — time travel, since committed epochs are immutable).
+    ``__epoch`` is a partition column, so the bound is a PartitionFilter:
+    an in-flight or crashed epoch's directories are pruned unread. The
+    list length is the epoch count, which compaction keeps bounded."""
+    tokens = [
+        tok
+        for seq, tok in committed_epochs(path)
+        if as_of_seq is None or seq <= as_of_seq
+    ]
+    return F.col(EPOCH_COL).isin(tokens) if tokens else F.lit(False)
 
 
 def mark_epoch_committed(

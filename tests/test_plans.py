@@ -1173,6 +1173,43 @@ def test_no_session_conf_overwrite_mode_in_streaming_modules():
     )
 
 
+def test_epoch_protocol_stays_inside_sink():
+    """streaming/sink.py is the one home of the epoch protocol: no other
+    package module imports one of its private (``_``-prefixed) names, and
+    none drops a commit marker itself — an append-only writer commits
+    through ``sink.commit_epoch``, which writes the marker after the
+    epoch's last write."""
+    import ast
+    import pathlib
+
+    import streaming_data_ingestion_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sink = root / "streaming" / "sink.py"
+    private_imports, markers = [], []
+    for src in sorted(root.rglob("*.py")):
+        if src == sink:
+            continue
+        for node in ast.walk(ast.parse(src.read_text())):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).endswith("streaming.sink"):
+                private_imports += [
+                    f"{src.name}:{a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+            if isinstance(node, ast.Call):
+                f = node.func
+                called = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if called == "mark_epoch_committed":
+                    markers.append(f"{src.name}:{node.lineno}")
+    assert private_imports == [], private_imports
+    assert markers == [], markers
+
+
 def test_assoc_rules_apriori_prune_is_exact_and_in_plan(spark):
     """q_assoc_rules must filter infrequent items BEFORE the quadratic
     pair self-join (the apriori prune that bounds Σ basket² against hot

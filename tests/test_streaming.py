@@ -209,41 +209,34 @@ def test_ingest_end_to_end(spark, tmp_path):
 
 
 def test_exactly_once_sink_survives_epoch_retry(spark, tmp_path):
-    """The epoch-partitioned sink must be idempotent: re-running the same
-    micro-batch (Spark's behavior after a mid-batch failure) replaces the
-    epoch's files instead of appending duplicates."""
-    from streaming_data_ingestion_spark.sources.json_stream import read_json_stream
-    from streaming_data_ingestion_spark.streaming.ingest import (
-        decode_users_from_files,
-        epoch_overwrite_writer,
-        run_ingest_exactly_once,
-    )
+    """The ingest sink commits each epoch once: replaying a committed
+    micro-batch under its checkpoint's query id (Spark's behavior after a
+    mid-batch failure) leaves the table as it was instead of appending
+    duplicates, and a genuinely new epoch still lands."""
+    from streaming_data_ingestion_spark.streaming.sink import commit_epoch
 
     in_dir = tmp_path / "wire"
     in_dir.mkdir()
     (in_dir / "batch0.jsonl").write_text("\n".join(fake_users_json_lines(20)))
 
     out_dir = str(tmp_path / "users_out")
-    ckpt = str(tmp_path / "ckpt")
-    stream = decode_users_from_files(read_json_stream(spark, str(in_dir)))
-    q = run_ingest_exactly_once(stream, out_dir, ckpt)
+    q = ingest_users_from_json_dir(
+        spark, str(in_dir), out_dir, str(tmp_path / "ckpt")
+    )
     q.awaitTermination(120)
+    assert spark.read.parquet(out_dir).count() == 20
 
-    out = spark.read.parquet(out_dir).drop("__epoch")
-    assert out.count() == 20
-
-    # Simulate Spark retrying epoch 0: replay the same batch through the
-    # same writer. Dynamic partition overwrite must leave exactly 20 rows.
-    # (Materialize first — a lazy read from out_dir would have its source
-    # files replaced underneath it by the overwrite.)
+    # Replay epoch 0 in the stream's own namespace. (Materialize first —
+    # a lazy read from out_dir would have its source files replaced
+    # underneath it by a write.)
     batch = spark.createDataFrame(
         spark.read.parquet(out_dir).drop("__epoch").collect()
     )
-    epoch_overwrite_writer(out_dir)(batch, 0)
+    commit_epoch(batch, out_dir, 0, run_ns=q.id)
     assert spark.read.parquet(out_dir).count() == 20
 
     # A genuinely new epoch still lands additively.
-    epoch_overwrite_writer(out_dir)(batch.limit(5), 1)
+    commit_epoch(batch.limit(5), out_dir, 1, run_ns=q.id)
     assert spark.read.parquet(out_dir).count() == 25
 
 
@@ -1401,8 +1394,8 @@ def test_incremental_exact_dedup_grows_its_index(spark, tmp_path):
     # the index holds exactly the three distinct digests
     assert spark.read.parquet(idx).select("digest").distinct().count() == 3
 
-    # epoch replay: re-running the full stream over a FRESH checkpoint
-    # (same inputs, same epochs) must converge to identical survivors
+    # re-running the full stream over a FRESH checkpoint (same inputs, a
+    # new namespace) dedups against the committed index: nothing new
     q3 = dedup_against_index(
         spark.readStream.schema("doc_id long, text string").option(
             "maxFilesPerTrigger", 1
@@ -1799,7 +1792,7 @@ def test_first_seen_growth_epoch_replay_idempotent(spark, tmp_path):
 
     def snapshot():
         idx = {
-            (r["user_id"], str(r["first_day"]), r["epoch"])
+            (r["user_id"], str(r["first_day"]), r["__epoch"])
             for r in spark.read.parquet(index).collect()
         }
         d = {
@@ -2826,7 +2819,7 @@ def test_ann_late_replay_keeps_commit_seq_and_rows(spark, tmp_path):
 def test_two_streams_fold_into_one_index_without_collision(spark, tmp_path):
     """Two SUCCESSIVE streams (fresh checkpoints, so both start at Spark
     epoch 0) folding into the same index must never overwrite each
-    other: distinct run namespaces keep their epoch slices disjoint, the
+    other: each checkpoint's query id namespaces its epoch slices, the
     committed view holds the union, and index_history shows both runs'
     commits in one total order."""
     from streaming_data_ingestion_spark.streaming.ann_stream import (
@@ -2846,19 +2839,18 @@ def test_two_streams_fold_into_one_index_without_collision(spark, tmp_path):
     gen = resolve_index(root)
     cents = load_centroids(gen)
 
-    def run_stream(lo, hi, ns, ckpt):
-        src = tmp_path / f"src_{ns}"
+    def run_stream(lo, hi, ckpt):
+        src = tmp_path / f"src_{ckpt}"
         emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).coalesce(
             1
         ).write.parquet(str(src))
         stream = spark.readStream.schema(emb.schema).parquet(str(src))
-        q = maintain_ann_index(
-            stream, gen, str(tmp_path / ckpt), cents, run_ns=ns
-        )
+        q = maintain_ann_index(stream, gen, str(tmp_path / ckpt), cents)
         q.awaitTermination(120)
+        return q.id
 
-    run_stream(32, 64, "runA", "ckptA")   # epochs start at 0
-    run_stream(64, 96, "runB", "ckptB")   # ...and so do these
+    run_a = run_stream(32, 64, "ckptA")   # epochs start at 0
+    run_b = run_stream(64, 96, "ckptB")   # ...and so do these
 
     got = read_committed_index(spark, gen)
     assert got.count() == 96  # nothing overwritten
@@ -2868,110 +2860,8 @@ def test_two_streams_fold_into_one_index_without_collision(spark, tmp_path):
         (r["run_ns"], r["epoch"]): r["seq"]
         for r in index_history(spark, gen).collect()
     }
-    assert ("base", 0) in hist and ("runA", 0) in hist and ("runB", 0) in hist
-    assert hist[("base", 0)] < hist[("runA", 0)] < hist[("runB", 0)]
-
-
-def test_ann_namespace_reuse_fails_loudly(spark, tmp_path):
-    """A second stream reusing a run namespace would find the first
-    run's commit markers and silently no-op its batches — checkpointed
-    as processed, rows never landed. The namespace claim (owner = the
-    checkpoint dir) must make that fail LOUDLY on the second stream's
-    first batch, while restarts of the SAME stream (same checkpoint)
-    keep working."""
-    import pytest as _pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from streaming_data_ingestion_spark.streaming.ann_stream import (
-        bootstrap_index,
-        load_centroids,
-        maintain_ann_index,
-        read_committed_index,
-        resolve_index,
-    )
-
-    emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").filter(
-        F.col("vec_id") < 64
-    )
-    root = str(tmp_path / "ann_root")
-    bootstrap_index(spark, emb.filter(F.col("vec_id") < 16), root, k_cells=3, n_iters=2)
-    gen = resolve_index(root)
-    cents = load_centroids(gen)
-
-    src1 = tmp_path / "src1"
-    emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 40)).coalesce(
-        1
-    ).write.parquet(str(src1))
-    s1 = spark.readStream.schema(emb.schema).parquet(str(src1))
-    q1 = maintain_ann_index(s1, gen, str(tmp_path / "ckpt1"), cents, run_ns="r")
-    q1.awaitTermination(120)
-    assert read_committed_index(spark, gen).count() == 40
-
-    # same checkpoint restarted (same owner): allowed, no-ops replays
-    s1b = spark.readStream.schema(emb.schema).parquet(str(src1))
-    q1b = maintain_ann_index(s1b, gen, str(tmp_path / "ckpt1"), cents, run_ns="r")
-    q1b.awaitTermination(120)
-    assert read_committed_index(spark, gen).count() == 40
-
-    # DIFFERENT checkpoint, same namespace: must raise, not drop rows
-    src2 = tmp_path / "src2"
-    emb.filter(F.col("vec_id") >= 40).coalesce(1).write.parquet(str(src2))
-    s2 = spark.readStream.schema(emb.schema).parquet(str(src2))
-    q2 = maintain_ann_index(s2, gen, str(tmp_path / "ckpt2"), cents, run_ns="r")
-    with _pytest.raises(StreamingQueryException, match="fresh run_ns"):
-        q2.awaitTermination(120)
-    assert read_committed_index(spark, gen).count() == 40  # nothing lost/overwritten
-
-
-def test_ownerless_fold_in_writer_refuses_used_namespace(spark, tmp_path):
-    """ADVICE r9: a fold_in_writer built WITHOUT an owner (the direct-
-    call pattern) must refuse to start over a namespace that already
-    carries commit markers — a fresh stream's epoch ids restart at 0,
-    so its batches would silently no-op against the previous run's
-    markers while its checkpoint recorded them processed (unrecoverable
-    data loss). Within ONE writer the guard must stay quiet: our own
-    just-written markers are not foreign."""
-    import pytest as _pytest
-
-    from streaming_data_ingestion_spark.streaming.ann_stream import (
-        bootstrap_index,
-        fold_in_writer,
-        load_centroids,
-        read_committed_index,
-        resolve_index,
-    )
-
-    emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").filter(
-        F.col("vec_id") < 48
-    )
-    root = str(tmp_path / "ann_root")
-    bootstrap_index(spark, emb.filter(F.col("vec_id") < 16), root, k_cells=3, n_iters=2)
-    gen = resolve_index(root)
-    cents = load_centroids(gen)
-
-    # first ownerless writer on a fresh namespace: fine, multiple epochs
-    w1 = fold_in_writer(gen, cents, run_ns="runA")
-    w1(emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 32)), 0)
-    w1(emb.filter(F.col("vec_id") >= 32), 1)
-    assert read_committed_index(spark, gen).count() == 48
-
-    # replay through the SAME writer instance: no-op, no raise
-    w1(emb.filter(F.col("vec_id") >= 32), 1)
-    assert read_committed_index(spark, gen).count() == 48
-
-    # a SECOND ownerless writer over the used namespace must refuse its
-    # first batch outright — before any marker comparison could no-op it
-    w2 = fold_in_writer(gen, cents, run_ns="runA")
-    with _pytest.raises(ValueError, match="without an owner"):
-        w2(emb.filter(F.col("vec_id") < 16), 0)
-    assert read_committed_index(spark, gen).count() == 48
-
-    # a fresh namespace is the sanctioned escape
-    w3 = fold_in_writer(gen, cents, run_ns="runB")
-    w3(emb.filter(F.col("vec_id") < 16).withColumn(
-        "vec_id", F.col("vec_id") + 1000
-    ), 0)
-    assert read_committed_index(spark, gen).count() == 64
+    assert ("base", 0) in hist and (run_a, 0) in hist and (run_b, 0) in hist
+    assert hist[("base", 0)] < hist[(run_a, 0)] < hist[(run_b, 0)]
 
 
 def test_maintenance_race_probe_on_previous_generation(spark, tmp_path):
@@ -2999,7 +2889,7 @@ def test_maintenance_race_probe_on_previous_generation(spark, tmp_path):
     root = str(tmp_path / "ann_root")
     bootstrap_index(spark, emb.filter(F.col("vec_id") < 32), root, k_cells=3, n_iters=2)
     gen0 = resolve_index(root)
-    wb = fold_in_writer(gen0, load_centroids(gen0), run_ns="r", owner="o")
+    wb = fold_in_writer(gen0, load_centroids(gen0), run_ns="r")
     wb(emb.filter(F.col("vec_id") >= 32), 0)
 
     q = [float(x) for x in emb.first()["embedding"]]
@@ -3033,3 +2923,337 @@ def test_maintenance_race_probe_on_previous_generation(spark, tmp_path):
     )
     # current-generation serving is untouched by the vacuum
     assert stale2.collect() == expect
+
+
+# --------------------------------------------------------------------------
+# Append-only epochs (streaming/sink.commit_epoch): a fresh checkpoint
+# restarts epoch ids at 0, so every writer must keep an earlier run's
+# epochs, and a two-table epoch must replay to the uncrashed state.
+# --------------------------------------------------------------------------
+
+
+def _ts(day: int):
+    import datetime
+
+    return datetime.datetime(2024, 1, day, 12)
+
+
+def _iso_ann_stream(spark, tmp_path):
+    from streaming_data_ingestion_spark.streaming.ann_stream import (
+        bootstrap_index,
+        load_centroids,
+        maintain_ann_index,
+        read_committed_index,
+        resolve_index,
+    )
+
+    emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").filter(
+        F.col("vec_id") < 64
+    )
+    root = str(tmp_path / "ann_root")
+    bootstrap_index(spark, emb.filter(F.col("vec_id") < 16), root, k_cells=3, n_iters=2)
+    gen = resolve_index(root)
+    cents = load_centroids(gen)
+
+    def run(lo, hi, ckpt):
+        src = tmp_path / f"src_{lo}"
+        if not src.exists():
+            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).coalesce(
+                1
+            ).write.parquet(str(src))
+        stream = spark.readStream.schema(emb.schema).parquet(str(src))
+        maintain_ann_index(stream, gen, str(tmp_path / ckpt), cents).awaitTermination(120)
+
+    run(16, 40, "ckpt_a")
+    run(16, 40, "ckpt_a")  # restart of run A: nothing new, nothing lost
+    assert read_committed_index(spark, gen).count() == 40
+    run(40, 64, "ckpt_b")
+    got = read_committed_index(spark, gen)
+    assert got.count() == 64
+    assert got.select("vec_id").distinct().count() == 64
+
+
+def _iso_bucket_growth(spark, tmp_path):
+    from streaming_data_ingestion_spark.streaming.bucket_growth import (
+        bucketed_growth_writer,
+        read_committed_facts,
+    )
+
+    li = load(spark, SF_DIR, "lineitem")
+    path = str(tmp_path / "li_iso")
+    try:
+        for ns, mod in (("run_a", 0), ("run_b", 1)):
+            wb = bucketed_growth_writer("li_iso", path, ["l_orderkey"], 4, run_ns=ns)
+            wb(li.filter(F.col("l_orderkey") % 3 == mod), 0)
+        spark.sql("REFRESH TABLE li_iso")
+        got = read_committed_facts(spark, "li_iso", path)
+        assert got.count() == li.filter(F.col("l_orderkey") % 3 != 2).count()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS li_iso")
+
+
+def _iso_growth(spark, tmp_path):
+    from streaming_data_ingestion_spark.streaming.growth import (
+        first_seen_batch_writer,
+    )
+
+    index, daily = str(tmp_path / "first_seen"), str(tmp_path / "daily")
+    schema = "user_id string, ts timestamp"
+    runs = {
+        "run-a": [("u1", _ts(1)), ("u2", _ts(2))],
+        "run-b": [("u1", _ts(3)), ("u3", _ts(3))],
+    }
+    for ns, rows in runs.items():
+        first_seen_batch_writer(index, daily, run_ns=ns)(
+            spark.createDataFrame(rows, schema), 0
+        )
+    first_day = {
+        r["user_id"]: r["first_day"].day for r in spark.read.parquet(index).collect()
+    }
+    assert first_day == {"u1": 1, "u2": 2, "u3": 3}
+    total = spark.read.parquet(daily).agg(F.sum("new_users")).first()[0]
+    assert total == len(first_day)
+
+
+def _iso_dedup_index(spark, tmp_path):
+    from streaming_data_ingestion_spark.streaming.dedup_index import (
+        dedup_against_index,
+    )
+
+    idx, out = str(tmp_path / "dd_index"), str(tmp_path / "dd_out")
+    runs = {"a": [(1, "alpha"), (2, "beta")], "b": [(3, "alpha"), (4, "gamma")]}
+    for name, rows in runs.items():
+        src = tmp_path / f"src_{name}"
+        src.mkdir()
+        (src / "b0.jsonl").write_text(
+            "\n".join(json.dumps({"doc_id": d, "text": t}) for d, t in rows)
+        )
+        stream = spark.readStream.schema("doc_id long, text string").json(str(src))
+        dedup_against_index(
+            stream, idx, out, str(tmp_path / f"ckpt_{name}")
+        ).awaitTermination(120)
+    survivors = sorted((r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect())
+    # run B's repeat of "alpha" is dropped; both runs' novel texts survive
+    assert survivors == [(1, "alpha"), (2, "beta"), (4, "gamma")]
+    assert spark.read.parquet(idx).count() == 3
+
+
+def _iso_dedup_stream(spark, tmp_path):
+    from streaming_data_ingestion_spark.queries.llm_dedup import (
+        minhash_bands_df,
+    )
+    from streaming_data_ingestion_spark.streaming.dedup_stream import (
+        band_stream,
+        flag_neardups,
+    )
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    hist_bands = minhash_bands_df(docs.filter(F.col("doc_id") < 300)).persist()
+    out = str(tmp_path / "flags")
+    want = set()
+    try:
+        # each run re-ingests copies of historical docs: near-dups by construction
+        for name, lo in (("a", 0), ("b", 20)):
+            wave = docs.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 20)
+            ).withColumn("doc_id", F.col("doc_id") + 10_000)
+            flagged = {
+                r["doc_id"]
+                for r in band_stream(wave)
+                .join(hist_bands, ["band_idx", "band_hash"], "left_semi")
+                .collect()
+            }
+            assert flagged, name
+            want |= flagged
+            src = str(tmp_path / f"src_{name}")
+            wave.coalesce(1).write.parquet(src)
+            stream = spark.readStream.schema(wave.schema).parquet(src)
+            flag_neardups(
+                stream, hist_bands, out, str(tmp_path / f"ckpt_{name}")
+            ).awaitTermination(120)
+    finally:
+        hist_bands.unpersist()
+    got = [r["doc_id"] for r in spark.read.parquet(out).collect()]
+    assert sorted(got) == sorted(want)
+
+
+def _iso_ingest(spark, tmp_path):
+    out = str(tmp_path / "users_out")
+    for name, n in (("a", 7), ("b", 5)):
+        src = tmp_path / f"wire_{name}"
+        src.mkdir()
+        (src / "b0.jsonl").write_text("\n".join(fake_users_json_lines(n)))
+        ingest_users_from_json_dir(
+            spark, str(src), out, str(tmp_path / f"ckpt_{name}")
+        ).awaitTermination(120)
+    assert spark.read.parquet(out).count() == 12
+
+
+_ISOLATION_CASES = {
+    "ann_stream": _iso_ann_stream,
+    "bucket_growth": _iso_bucket_growth,
+    "growth": _iso_growth,
+    "dedup_index": _iso_dedup_index,
+    "dedup_stream": _iso_dedup_stream,
+    "ingest": _iso_ingest,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_ISOLATION_CASES))
+def test_fresh_run_keeps_earlier_runs_epochs(spark, tmp_path, writer):
+    """Run A, then run B over the same output paths on a fresh checkpoint
+    (a stream) or under another ``run_ns`` (a writer driven by hand).
+    Both start at epoch 0, and both runs' rows must survive: each run's
+    epochs live in its own namespace, so B never overwrites or skips A's
+    epoch 0, and a reader of history (dedup index, first-seen index)
+    sees A's committed rows."""
+    _ISOLATION_CASES[writer](spark, tmp_path)
+
+
+def _two_epoch_stream(spark, tmp_path, schema, waves):
+    """A file stream that delivers ``waves`` as epochs 0, 1, … in order."""
+    import os
+    import time
+
+    src = tmp_path / "src"
+    if not src.exists():
+        src.mkdir(parents=True)
+        base = time.time() - 100
+        for i, rows in enumerate(waves):
+            f = src / f"b{i}.jsonl"
+            f.write_text("\n".join(json.dumps(r, default=str) for r in rows))
+            os.utime(f, (base + 10 * i, base + 10 * i))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+
+
+def _crash_dedup_index(spark, run_dir):
+    from streaming_data_ingestion_spark.streaming.dedup_index import (
+        dedup_against_index,
+    )
+
+    waves = [
+        [{"doc_id": 1, "text": "alpha beta"}, {"doc_id": 2, "text": "gamma"}],
+        [
+            {"doc_id": 3, "text": "alpha beta"},
+            {"doc_id": 4, "text": "delta"},
+            {"doc_id": 5, "text": "Delta "},
+        ],
+    ]
+    idx, out = str(run_dir / "index"), str(run_dir / "out")
+
+    def run():
+        stream = _two_epoch_stream(spark, run_dir, "doc_id long, text string", waves)
+        dedup_against_index(stream, idx, out, str(run_dir / "ckpt")).awaitTermination(120)
+
+    def tables():
+        return (
+            sorted(tuple(r) for r in spark.read.parquet(out).drop("__epoch").collect()),
+            sorted(tuple(r) for r in spark.read.parquet(idx).drop("__epoch").collect()),
+        )
+
+    return run, tables
+
+
+def _crash_growth(spark, run_dir):
+    from streaming_data_ingestion_spark.streaming.growth import maintain_first_seen
+
+    waves = [
+        [{"user_id": "u1", "ts": _ts(1)}, {"user_id": "u2", "ts": _ts(2)}],
+        [
+            {"user_id": "u1", "ts": _ts(3)},
+            {"user_id": "u3", "ts": _ts(3)},
+            {"user_id": "u3", "ts": _ts(4)},
+        ],
+    ]
+    index, daily = str(run_dir / "index"), str(run_dir / "daily")
+
+    def run():
+        stream = _two_epoch_stream(spark, run_dir, "user_id string, ts timestamp", waves)
+        maintain_first_seen(stream, index, daily, str(run_dir / "ckpt")).awaitTermination(120)
+
+    def tables():
+        return (
+            sorted(tuple(r) for r in spark.read.parquet(index).drop("__epoch").collect()),
+            sorted(
+                tuple(r)
+                for r in spark.read.parquet(daily).select("day", "new_users").collect()
+            ),
+        )
+
+    return run, tables
+
+
+_CRASH_POINTS = {
+    # (wrapped sink function, the call that raises): each epoch makes two
+    # overwrite_partitions calls and one mark; the crash hits epoch 1
+    "before_first_write": ("overwrite_partitions", 3),
+    "between_writes": ("overwrite_partitions", 4),
+    "before_marker": ("mark_epoch_committed", 2),
+}
+
+
+@pytest.mark.parametrize("point", sorted(_CRASH_POINTS))
+@pytest.mark.parametrize("writer", ["dedup_index", "growth"])
+def test_two_table_epoch_replays_to_uncrashed_state(
+    spark, tmp_path, monkeypatch, writer, point
+):
+    """An epoch that writes two tables crashes once — before its first
+    write, between its writes, or after both but before its marker. The
+    restart on the same checkpoint replays the epoch in the same
+    namespace, and every table must then equal an uncrashed run's. This
+    pins the committed-only read of the index: were the replay to see its
+    own attempt's index partition, it would find no new digests or users
+    and drop them from the output or the daily counts."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from streaming_data_ingestion_spark.streaming import (
+        dedup_index,
+        growth,
+        sink,
+    )
+
+    case = {"dedup_index": _crash_dedup_index, "growth": _crash_growth}[writer]
+    run_ref, tables_ref = case(spark, tmp_path / "uncrashed")
+    run_ref()
+
+    name, nth = _CRASH_POINTS[point]
+    real = getattr(sink, name)
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(name)
+        if len(calls) == nth:
+            raise RuntimeError(f"injected crash at {name} call {nth}")
+        return real(*args, **kwargs)
+
+    for mod in (sink, dedup_index, growth):
+        if hasattr(mod, name):
+            monkeypatch.setattr(mod, name, crash_once)
+    run, tables = case(spark, tmp_path / "crashed")
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run()
+    monkeypatch.undo()
+    assert len(calls) == nth
+    run()  # restart: the checkpoint replays epoch 1 under the same query id
+    assert tables() == tables_ref()
+
+
+def test_read_if_exists_propagates_every_error_but_a_missing_path(
+    spark, tmp_path
+):
+    """The one missing-table read: a path that does not exist is "no
+    table yet"; any other read failure (here a directory with no parquet
+    files, whose schema cannot be inferred) must propagate, never be read
+    as an empty history."""
+    from pyspark.errors import AnalysisException
+
+    from streaming_data_ingestion_spark.streaming.sink import read_if_exists
+
+    assert read_if_exists(spark, str(tmp_path / "absent")) is None
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        read_if_exists(spark, str(tmp_path / "empty"))
